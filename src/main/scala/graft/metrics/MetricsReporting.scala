@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -162,13 +163,20 @@ final class CollectingReporter extends MetricsReporter {
 
 /** StreamingQueryListener translating per-batch progress into the
   * interval metrics record and fanning out to the configured reporters
-  * (D7: the accumulator surface; A12: the reporter surface). */
+  * (D7: the accumulator surface; A12: the reporter surface). A reporter
+  * that throws never stops the stream: non-fatal errors are counted per
+  * reporter ([[reporterFailures]]), fatal ones propagate. */
 final class CdcMetricsListener(
     reporters: Seq[MetricsReporter],
     namespace: String = "graft") extends StreamingQueryListener {
 
   private val hostname =
-    try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
+    try java.net.InetAddress.getLocalHost.getHostName catch { case NonFatal(_) => "unknown" }
+  private val failures = new java.util.concurrent.atomic.AtomicLongArray(reporters.size)
+
+  /** Interval records each reporter failed to emit, in `reporters` order. */
+  def reporterFailures: Seq[Long] = reporters.indices.map(failures.get)
+
   // Interval bounds are tracked PER QUERY — the listener is registered
   // session-wide and several queries may report interleaved.
   private val lastEndByQuery =
@@ -211,8 +219,8 @@ final class CdcMetricsListener(
       producedUpdateChangesCount = opCount("updates"),
       producedSnapshotRecordsCount = opCount("snapshots"),
       producedDeletionTombstonesCount = opCount("tombstones"))
-    reporters.foreach { r =>
-      try r.emit(m) catch { case _: Throwable => () } // a reporter must never kill the stream
+    reporters.zipWithIndex.foreach { case (r, i) =>
+      try r.emit(m) catch { case NonFatal(_) => failures.incrementAndGet(i) }
     }
   }
 

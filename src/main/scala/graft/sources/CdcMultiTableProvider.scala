@@ -42,9 +42,13 @@ import graft.model.{ChangeIndex, Policies}
   * to the single-table schema — the reference's unified-topic
   * discriminator.
   *
-  * Scale: the per-trigger cost is one boundary probe per table (a
-  * one-row aggregation; the reference pays the same per-table poll), and
-  * the chosen window's partitions are the single-table backend's — rows
+  * Scale: the per-trigger cost is one boundary probe per table (the
+  * reference pays the same per-table poll). Over staged parquet a probe
+  * is a lookup in the table's driver-side key index — a directory
+  * listing, a binary search per file and a `batchSize`-bounded merge,
+  * no Spark job — and the index holds the key columns of the backlog not
+  * yet admitted. The chosen window's partitions are the single-table
+  * backend's, one per file whose key range overlaps the window — rows
   * never route through the driver.
   *
   * Usage:
@@ -164,7 +168,7 @@ private class CdcMultiTableStream(tables: Seq[String], batchSize: Int,
       "SupportsAdmissionControl.latestOffset(start, limit) is used")
 
   /** The global scheduler. Boundary-probes every snapshot-done table
-    * (one tiny driver job each — the reference's per-table poll), then:
+    * (a driver-side lookup each — the reference's per-table poll), then:
     * lagging tables drain first with snapshots paused; otherwise the
     * first unfinished snapshot advances one page; otherwise the first
     * table with pending changes advances one window. */

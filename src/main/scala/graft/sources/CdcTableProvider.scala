@@ -4,14 +4,12 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,21 +22,25 @@ import graft.model.{ChangeIndex, TrackedFieldMeta}
   * `db_row_batch_size` — each micro-batch advances at most `batchSize`
   * rows in strict change-index order.
   *
-  * Scale shape (round-2 redesign): the driver runs exactly ONE small job
-  * per trigger — a boundary probe that returns a single aggregated row
-  * (the batch's end key), never the window itself — and each
-  * InputPartition carries only the PREDICATE (the offset range) plus a
-  * file split; executors read the staged parquet directly. Round 1
+  * Scale shape: a trigger's boundary probe returns only the batch's end
+  * key, never the window itself, and each InputPartition carries only
+  * the PREDICATE (the offset range) plus a file split; executors read the
+  * staged parquet directly. The parquet backend answers its probes on
+  * the driver from a sorted key index ([[ParquetKeyIndex]]) with no
+  * Spark job at all, so a trigger's only job is the batch itself. Round 1
   * computed every window twice (ordered scan in `latestOffset`, re-scan in
   * `planInputPartitions`) and shipped all rows driver→executor, which
   * caps throughput at driver memory — the reference has the same
   * single-process bottleneck by design (`tracked_tables.py` row queues),
-  * and this source exists to remove it.
+  * and this source exists to remove it. The index keeps driver memory to
+  * the KEY columns of the backlog not yet admitted.
   *
   * TWO BACKENDS behind one offset/admission mechanism (round-6 addition):
   *
-  *   - PARQUET (default): boundary probes are one-row Spark aggregations
-  *     over the staged feed; partitions carry a file split + predicate.
+  *   - PARQUET (default): boundary probes are a binary search per file
+  *     plus a `batchSize`-bounded merge over the driver-side key index of
+  *     the staged feed; partitions carry a file split + predicate, one per
+  *     file whose key range overlaps the window.
   *   - JDBC (`jdbcUrl` set): boundary probes issue
   *     [[SqlServerDialect.changeBoundaryQuery]]/[[SqlServerDialect.snapshotBoundaryQuery]]
   *     over a driver-side connection (batchSize narrow KEY tuples cross
@@ -185,7 +187,7 @@ private object LsnGap {
     * the floor is the immediate successor, and it makes resnapshot
     * re-fire after its own backfill.) IgnoreGap skips the probe entirely
     * — resume-from-min falls out of the strictly-after scan with no
-    * extra job (the reference's begin_at_min_lsn). */
+    * extra probe (the reference's begin_at_min_lsn). */
   def resolve(backend: FeedBackend, table: String,
       stored: graft.model.ChangeIndex,
       strategy: graft.model.Policies.LsnGapAction): Outcome = {
@@ -216,8 +218,10 @@ private object LsnGap {
 /** The data-access seam between the offset/admission mechanics (shared)
   * and the storage a deployment actually reads (staged parquet or a live
   * JDBC endpoint). Boundary probes run ON THE DRIVER once per trigger and
-  * return a single key; partition methods return predicate-carrying
-  * splits for the committed range — never rows. */
+  * return a single key — from an in-memory key index (parquet) or a
+  * driver-side seek query (JDBC), never a Spark job; partition methods
+  * return predicate-carrying splits for the committed range — never
+  * rows. */
 private trait FeedBackend {
   /** Max change index among the batchSize rows strictly after `start`,
     * WITH the window's row count (count == batchSize means the table has
@@ -269,10 +273,10 @@ private class CdcMicroBatchStream(tableName: String, batchSize: Int,
   // G5 runs ONCE per query instance, on the first change advance — the
   // reference's startup progress-vs-min-LSN validation
   // (`tracked_tables.py:137-163`), where a gap can actually appear (the
-  // stream was down, cleanup ran). A per-trigger probe would double the
-  // driver's per-trigger job count for a condition that cannot arise
-  // while the query itself is consuming (CdcSourcePlanSpec pins the
-  // one-probe-per-trigger budget).
+  // stream was down, cleanup ran). A per-trigger probe would add a
+  // driver-side seek (JDBC) or directory listing (parquet) to every
+  // trigger for a condition that cannot arise while the query itself is
+  // consuming.
   private val gapChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private def pos(o: Offset): TablePosition =
@@ -389,102 +393,56 @@ private class CdcMicroBatchStream(tableName: String, batchSize: Int,
   override def stop(): Unit = ()
 }
 
-/** Staged-parquet backend: probes are one-row Spark aggregations; splits
-  * are (file, predicate) pairs read executor-side with the parquet Group
-  * API. */
+/** Staged-parquet backend: probes are answered on the driver from a
+  * [[ParquetKeyIndex]] per directory (no Spark job); splits are
+  * (file, predicate) pairs for the files whose key range overlaps the
+  * committed window, read executor-side with the parquet Group API. */
 private class ParquetBackend(feedDir: String, snapshotDir: Option[String],
     batchSize: Int) extends FeedBackend {
 
-  private def spark = SparkSession.active
+  private val changes = new ParquetKeyIndex(feedDir,
+    Array("lsn_num", "command_id", "seqval_num", "operation"))
+  private val snapshot =
+    snapshotDir.map(new ParquetKeyIndex(_, Array("user_id", "event_id")))
 
   override def hasSnapshot: Boolean = snapshotDir.isDefined
 
-  private def belowPredicate(k: Long, e: Long) =
-    col("user_id") < k || (col("user_id") === k && col("event_id") < e)
+  private def key(i: (Long, Int, Long, Int)): Array[Long] =
+    Array(i._1, i._2.toLong, i._3, i._4.toLong)
+
+  private def index(k: Array[Long]): ChangeIndex =
+    ChangeIndex(ChangeIndex.lsnFromLong(k(0)), k(1).toInt,
+      ChangeIndex.lsnFromLong(k(2)), k(3).toInt)
 
   /** Boundary probe for the next reverse-keyset snapshot page: the MIN
     * composite key among the `batchSize` keys strictly below the bound
-    * (A2's query shape, reduced to its last row). One job, one row back
-    * to the driver; None when the page is empty (snapshot drained, G3). */
-  override def snapshotPageBoundary(below: Option[(Long, Long)]): Option[(Long, Long)] = {
-    if (snapshotDir.isEmpty) return None
-    val base = spark.read.schema(CdcTableProvider.schema)
-      .parquet(snapshotDir.get)
-    val bounded = below.map { case (k, e) => base.filter(belowPredicate(k, e)) }
-      .getOrElse(base)
-    val r = bounded.orderBy(col("user_id").desc, col("event_id").desc)
-      .limit(batchSize)
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("user_id"), col("event_id"))).as("lo"))
-      .head()
-    if (r.getLong(0) == 0L) None
-    else Some((r.getStruct(1).getLong(0), r.getStruct(1).getLong(1)))
-  }
+    * (A2's query shape, reduced to its last row). None when the page is
+    * empty (snapshot drained, G3). */
+  override def snapshotPageBoundary(below: Option[(Long, Long)]): Option[(Long, Long)] =
+    snapshot.flatMap(_.descendingBelow(below.map { case (k, e) => Array(k, e) }, batchSize))
+      .map { case (k, _) => (k(0), k(1)) }
 
   /** Boundary probe for the next change window: the MAX change index among
     * the `batchSize` rows strictly after `start` (A1's ordered TOP scan,
     * reduced to its last row). None when no new rows exist. */
-  override def changeBoundary(start: ChangeIndex): Option[(ChangeIndex, Long)] = {
-    val (sl, sc, ss, so) = ChangeIndex.parts(start)
-    val r = spark.read.schema(CdcTableProvider.schema).parquet(feedDir)
-      .filter(struct(col("lsn_num"), col("command_id"), col("seqval_num"), col("operation")) >
-        struct(lit(sl).as("lsn_num"), lit(sc).as("command_id"),
-          lit(ss).as("seqval_num"), lit(so).as("operation")))
-      .orderBy(col("lsn_num"), col("command_id"), col("seqval_num"), col("operation"))
-      .limit(batchSize)
-      .agg(count(lit(1)).as("n"),
-        max(struct(col("lsn_num"), col("command_id"),
-          col("seqval_num"), col("operation"))).as("hi"))
-      .head()
-    if (r.getLong(0) == 0L) None
-    else {
-      val s = r.getStruct(1)
-      Some((ChangeIndex(ChangeIndex.lsnFromLong(s.getLong(0)), s.getInt(1),
-        ChangeIndex.lsnFromLong(s.getLong(2)), s.getInt(3)), r.getLong(0)))
-    }
-  }
+  override def changeBoundary(start: ChangeIndex): Option[(ChangeIndex, Long)] =
+    changes.ascendingAfter(key(ChangeIndex.parts(start)), batchSize)
+      .map { case (k, n) => (index(k), n) }
 
-  override def minAvailableChange(): Option[ChangeIndex] = {
-    val r = spark.read.schema(CdcTableProvider.schema).parquet(feedDir)
-      .agg(min(struct(col("lsn_num"), col("command_id"),
-        col("seqval_num"), col("operation"))).as("lo"))
-      .head()
-    if (r.isNullAt(0)) None
-    else {
-      val s = r.getStruct(0)
-      Some(ChangeIndex(ChangeIndex.lsnFromLong(s.getLong(0)), s.getInt(1),
-        ChangeIndex.lsnFromLong(s.getLong(2)), s.getInt(3)))
-    }
-  }
+  override def minAvailableChange(): Option[ChangeIndex] = changes.min.map(index)
 
-  override def maxAvailableChange(): Option[ChangeIndex] = {
-    val r = spark.read.schema(CdcTableProvider.schema).parquet(feedDir)
-      .agg(max(struct(col("lsn_num"), col("command_id"),
-        col("seqval_num"), col("operation"))).as("hi"))
-      .head()
-    if (r.isNullAt(0)) None
-    else {
-      val s = r.getStruct(0)
-      Some(ChangeIndex(ChangeIndex.lsnFromLong(s.getLong(0)), s.getInt(1),
-        ChangeIndex.lsnFromLong(s.getLong(2)), s.getInt(3)))
-    }
-  }
-
-  private def listParquet(dir: String): Array[String] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(path).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
-  }
+  override def maxAvailableChange(): Option[ChangeIndex] = changes.max.map(index)
 
   override def changePartitions(start: (Long, Int, Long, Int),
       end: (Long, Int, Long, Int)): Array[InputPartition] =
-    listParquet(feedDir).map(f => ChangeRangePartition(f, start, end): InputPartition)
+    changes.files(key(start), loOpen = true, Some(key(end)), hiOpen = false)
+      .map(f => ChangeRangePartition(f, start, end): InputPartition)
 
   override def snapshotPartitions(upper: Option[(Long, Long)],
       lower: (Long, Long)): Array[InputPartition] =
-    listParquet(snapshotDir.get).map(f =>
-      SnapshotRangePartition(f, upper, lower): InputPartition)
+    snapshot.get.files(Array(lower._1, lower._2), loOpen = false,
+      upper.map { case (k, e) => Array(k, e) }, hiOpen = true)
+      .map(f => SnapshotRangePartition(f, upper, lower): InputPartition)
 }
 
 /** The capture-instance schema changed under a running query. A

@@ -37,23 +37,21 @@ object UnifiedStream {
     }.reduce(_ unionByName _)
 
   /** One produce window in the single-partition layout, sorted in global
-    * change-index order. coalesce(1) is SEMANTICS, not an accident: the
+    * change-index order. One partition is SEMANTICS, not an accident: the
     * reference's unified topic has exactly one partition so the topic
     * itself is the total order (`validation.py:221-224`), and this sink
     * reproduces that contract — a single sorted file per window. The
-    * cost is a single-task write per window; when the per-window volume
-    * outgrows one task, [[writePartitionedWindow]] is the 100× layout
-    * (disjoint ordered ranges instead of one run). */
+    * window is gathered into one partition by a shuffle and sorted there:
+    * the source is read once, in parallel, and no range-sampling job runs
+    * (a global `orderBy` samples the source in a job of its own, then
+    * reads it again). The cost is a single-task sort and write per window;
+    * when the per-window volume outgrows one task,
+    * [[writePartitionedWindow]] is the 100× layout (disjoint ordered
+    * ranges instead of one run). */
   private def writeOrderedWindow(batch: DataFrame, batchId: Long,
-      sinkDir: String): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch.orderBy(idxCols: _*)
-      .coalesce(1)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .parquet(sinkDir)
-  }
+      sinkDir: String): Unit =
+    overwriteWindow(batch.repartition(1).sortWithinPartitions(idxCols: _*),
+      batchId, sinkDir)
 
   /** One produce window in the scale layout: RANGE-partitioned by the
     * global change index and sorted within partitions — every partition
@@ -64,15 +62,21 @@ object UnifiedStream {
       sinkDir: String, partitions: Int): Unit = {
     val n = if (partitions > 0) partitions
       else batch.sparkSession.sparkContext.defaultParallelism
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch.repartitionByRange(n, idxCols: _*)
+    overwriteWindow(batch.repartitionByRange(n, idxCols: _*)
       .sortWithinPartitions(idxCols: _*)
-      .withColumn("part", spark_partition_id())
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .parquet(sinkDir)
+      .withColumn("part", spark_partition_id()), batchId, sinkDir)
   }
+
+  /** Writes a window as the `batch_id` partition of the sink, replacing
+    * only that partition, so a replayed batch rewrites its own output.
+    * The dynamic overwrite mode is a per-write option: set on the
+    * session, it would turn every later partitioned overwrite in that
+    * session dynamic too. */
+  private def overwriteWindow(window: DataFrame, batchId: Long,
+      sinkDir: String): Unit =
+    window.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(sinkDir)
 
   /** Run the unified publisher over per-table staged feeds until drained.
     * Each feed is a CdcPipeline-staged directory; `src` labels the table. */

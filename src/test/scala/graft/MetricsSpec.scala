@@ -67,6 +67,38 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
       l.contains("\"metrics_namespace\": \"graft\"")))
   }
 
+  test("a throwing reporter is counted per reporter and never stops the stream") {
+    val collector = new CollectingReporter
+    val failing = new graft.metrics.MetricsReporter {
+      override def emit(m: IntervalMetrics): Unit =
+        throw new java.io.IOException("reporter endpoint down")
+    }
+    val listener = new CdcMetricsListener(Seq(failing, collector))
+    // Four feed files of 250 inserts: one micro-batch each.
+    (0 until 4).foreach { f =>
+      spark.sql(
+        s"""SELECT cast(id + 1 as long) AS lsn_num, 0 AS command_id,
+           |       cast(id as long) AS seqval_num, 2 AS operation,
+           |       cast(id as long) AS event_id, cast(id % 50 as long) AS user_id,
+           |       'e' AS event_type, cast(id as double) AS value, '' AS props
+           |FROM range(${f * 250}, ${(f + 1) * 250})""".stripMargin)
+        .coalesce(1).write.mode("append").parquet(s"$work/feedF")
+    }
+    spark.streams.addListener(listener)
+    try CdcPipeline.runToParquet(spark, s"$work/feedF", s"$work/sinkF", s"$work/ckptF")
+    finally spark.streams.removeListener(listener)
+
+    val deadline = System.currentTimeMillis() + 15000
+    while (collector.all.size < 4 && System.currentTimeMillis() < deadline)
+      Thread.sleep(200)
+    // Every batch ran and reached the healthy reporter...
+    assert(collector.all.size >= 4)
+    assert(collector.all.map(_.inputRowsCount).sum === 1000L)
+    assert(spark.read.parquet(s"$work/sinkF").count() > 0)
+    // ...and the failing reporter's failures were counted, one per record.
+    assert(listener.reporterFailures === Seq(collector.all.size.toLong, 0L))
+  }
+
   private def sampleMetrics(batchId: Long): IntervalMetrics =
     IntervalMetrics(
       metricsNamespace = "graft-test", processHostname = "host",
