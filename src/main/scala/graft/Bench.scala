@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -62,7 +63,10 @@ object Bench {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          false
+        }
       val t = (System.nanoTime() - t0) / 1e9
       graft.operators.PinnedStages.sweepTransient(spark)
       name -> (if (ok) t else Double.PositiveInfinity)
@@ -70,11 +74,10 @@ object Bench {
     // N full passes (default 3), per-query MIN: a transient machine-load
     // spike in one pass cannot fabricate a regression (round 6 recorded a
     // phantom 5x on e1_global_merge from a loaded sandbox). The session
-    // memos — and their now-explicitly-tracked checkpoint blocks — are
-    // dropped between passes so every pass re-pays each producer stage's
-    // real cost; otherwise the memoized stages would time near zero and
-    // the min would underclaim. All pass totals and the load averages
-    // are emitted so a reader can judge the run's trustworthiness.
+    // memo is reset between passes so every pass re-pays each producer
+    // stage's real cost; otherwise the memoized stages would time near
+    // zero and the min would underclaim. All pass totals and the load
+    // averages are emitted so a reader can judge the run's trustworthiness.
     // Honest config handling: a non-numeric value fails with a clear
     // message (not a bare NumberFormatException mid-startup) and an
     // explicit 1 is honored — a single-pass smoke run is a legitimate
@@ -84,15 +87,7 @@ object Bench {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$passesRaw'"))
     val passResults: Seq[Seq[(String, Double)]] = (1 to passes).map { i =>
-      if (i > 1) {
-        graft.queries.DedupQueries.clearSessionMemos()
-        graft.queries.TokenizerQueries.clearSessionMemos()
-        graft.queries.PcaQueries.clearSessionMemos()
-        graft.queries.SketchQueries.clearSessionMemos()
-        graft.queries.SimilarityQueries.clearSessionMemos()
-        graft.operators.AsOfJoin.clearBoundsCache()
-        graft.operators.PinnedStages.releaseShared(spark)
-      }
+      if (i > 1) graft.operators.SessionMemo.reset(spark)
       sweep()
     }
     val byPass: Seq[Map[String, Double]] = passResults.map(_.toMap)

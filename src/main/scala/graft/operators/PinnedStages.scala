@@ -107,8 +107,9 @@ object PinnedStages {
     }
   }
 
-  /** Unpersist the shared pins too and forget them — pair with dropping
-    * the memos that reference them (e.g. between bench passes). */
+  /** Unpersist the shared pins too and forget them. Only after the memo
+    * entries that reference them are dropped: [[SessionMemo.reset]] does
+    * both, in that order. */
   def releaseShared(spark: SparkSession): Unit = synchronized {
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (shared.contains(id)) rdd.unpersist(blocking = false)

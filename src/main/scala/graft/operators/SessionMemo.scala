@@ -2,12 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE session-scoped memo for cross-query shared relations (the
-  * r12 verdict's #2 ask generalized): each memoized value is keyed by
-  * (live-session key, tag) and built at most once per session, so a
-  * catalog pass that serves `ann_nsw_topk` standalone and then again
-  * inside `ann_recall_report` pays the serve ONCE — production evaluates
-  * recall from materialized index outputs, never by re-serving.
+/** The ONLY cross-query memo for shared relations (the r12 verdict's #2
+  * ask generalized): each memoized value is keyed by (live-session key,
+  * tag) and built at most once per session, so a catalog pass that
+  * serves `ann_nsw_topk` standalone and then again inside
+  * `ann_recall_report` pays the serve ONCE — production evaluates
+  * recall from materialized index outputs, never by re-serving. Tags
+  * read `<family>/<stage>/<dir>`; a stage built from other stages reads
+  * them through nested `cached` calls.
   *
   * Contract for DataFrame values: producers MUST materialize through
   * [[PinnedStages.sharedCheckpoint]] (never a bare `pinned()`): Bench
@@ -23,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   * regenerating fixtures) must call [[clear]] — the memo cannot see
   * filesystem writes.
   *
-  * Bench seam: [[clear]] runs between timed passes (with
-  * `PinnedStages.releaseShared`) so every pass re-pays each producer's
-  * real cost and the per-query min never underclaims.
+  * Between bench passes, [[reset]] drops everything a pass memoized so
+  * the next pass re-pays each producer's real cost and the per-query min
+  * never underclaims.
   */
 object SessionMemo {
 
@@ -60,6 +62,20 @@ object SessionMemo {
   }
 
   def clear(): Unit = synchronized(memo.clear())
+
+  /** Drops everything memoized across queries, in the one safe order:
+    * the entries first, then the AsOfJoin bounds cache, then the shared
+    * checkpoint blocks. Releasing the blocks while an entry still holds
+    * a DataFrame over them would hand the next reader a dead relation
+    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`). The blocks are released
+    * explicitly because the context cleaner only reclaims them on a GC,
+    * which a large heap may never run (the round-7 4-5x bench
+    * regression). */
+  def reset(spark: SparkSession): Unit = {
+    clear()
+    AsOfJoin.clearBoundsCache()
+    PinnedStages.releaseShared(spark)
+  }
 
   private[graft] def size: Int = synchronized(memo.size)
 }

@@ -112,26 +112,19 @@ object DedupQueries {
        |          i -> ${hDuck("substr(text, i, 8)")}) AS hs
        |      FROM corpus)""".stripMargin
 
-  // Session-scoped memo of the MATERIALIZED LSH candidate pairs, keyed by
-  // (session, input dir): dd_cluster consumes exactly the pair list
-  // dd_minhash_lsh computes, and re-running the band join per query was
-  // round-1's biggest avoidable recompute (verdict #6). The pipeline is
-  // deterministic for a given input, so reuse cannot change any result —
-  // this is cross-query exchange reuse done by hand, the same stage a
+  // The MATERIALIZED LSH candidate pairs are memoized per session:
+  // dd_cluster consumes exactly the pair list dd_minhash_lsh computes,
+  // and re-running the band join per query was round-1's biggest
+  // avoidable recompute (verdict #6). The pipeline is deterministic for a
+  // given input, so reuse cannot change any result — the same stage a
   // cluster deployment would persist between dedup passes.
-  private val lshMemo =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
   def ddMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    lshMemo.getOrElseUpdate((spark.sparkContext.applicationId + "/" + spark.sparkContext.startTime, dir),
+    graft.operators.SessionMemo.cached(spark, s"dd/lsh/$dir")(
       graft.operators.PinnedStages.sharedCheckpoint(computeMinhashLsh(spark, dir)))
 
   // The signature stage (shingle → 16 minhashes) memoizes separately from
   // the pair stage: both the plain and the SALTED band joins consume the
   // identical signature relation, so neither re-hashes the corpus.
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
   /** Checkpointed (doc_id, mh) signatures, computed once per (session,
     * dir). Signatures come from the fused single-pass minhash_signature
     * expression (codegen + thread-local digest — the interpreted HOF
@@ -141,13 +134,13 @@ object DedupQueries {
     * re-run the hashing three times over. At cluster scale this stage is
     * a checkpoint / exchange-reuse point for the same reason. */
   private def signatures(spark: SparkSession, dir: String): DataFrame =
-    sigMemo.getOrElseUpdate((spark.sparkContext.applicationId + "/" + spark.sparkContext.startTime, dir), {
+    graft.operators.SessionMemo.cached(spark, s"dd/signatures/$dir") {
       viewDocs(spark, dir)
       graft.expr.GraftFunctions.register(spark)
       graft.operators.PinnedStages.sharedCheckpoint(spark.sql(
         s"""WITH corpus AS ($corpusSparkSql)
            |SELECT doc_id, minhash_signature(text) AS mh FROM corpus""".stripMargin))
-    })
+    }
 
   private def computeMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
     signatures(spark, dir).createOrReplaceTempView("mh_t")
@@ -629,6 +622,19 @@ object DedupQueries {
        |FROM pairs WHERE cs >= 0.95
        |GROUP BY vec_removed""".stripMargin
 
+  /** Forwards to [[graft.operators.SessionMemo.clear]]; kept because the
+    * perfbench catalog workload clears by family name. */
+  def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
+
+  /** Memoized served output: each detector's final bounded pair list,
+    * checkpointed SHARED so dd_recall_report / dd_prefix_stats consume
+    * the standalone queries' materialized results instead of re-running
+    * the pipelines (r12's report regression). */
+  private def served(name: String, f: (SparkSession, String) => DataFrame)(
+      spark: SparkSession, dir: String): DataFrame =
+    graft.operators.SessionMemo.cached(spark, s"served/$name/$dir")(
+      graft.operators.PinnedStages.sharedCheckpoint(f(spark, dir)))
+
   // ── dd_cluster ★ — duplicate CLUSTERING: connected components over the
   // LSH candidate graph, so each group of mutual near-dups collapses to
   // one keeper (min doc_id = cluster id). Spark side: iterative min-label
@@ -637,42 +643,14 @@ object DedupQueries {
   // large-scale connected-components shape; [[ddClusterStar]] below is
   // the large-star/small-star variant for high-diameter graphs. Oracle:
   // DuckDB recursive CTE computing the reachable-set minimum.
-  // Same cross-query reuse as lshMemo, one stage later: the cluster
-  // assignment is consumed by both dd_cluster's own output and
-  // pipe_canonicalize's keeper selection — without the memo the whole
-  // propagation loop re-runs per consumer (round-1 verdict #6's pattern).
-  // The label table is cluster-member-sized (tiny next to the corpus), so
-  // the checkpoint is cheap to hold.
-  private val clusterMemo =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
-  /** Bench seam: drop every session-scoped materialization memo so a
-    * repeat timed pass re-pays each stage's REAL cost instead of reading
-    * its predecessor's checkpointed blocks — without this, a two-pass
-    * benchmark's second pass reports near-zero for the producer stages
-    * and the per-query min underclaims. The checkpointed blocks behind
-    * the memos are registered in [[graft.operators.PinnedStages]];
-    * callers that clear the memos should also call
-    * `PinnedStages.releaseShared` to drop the blocks explicitly (the
-    * context cleaner only reclaims them on a GC, which a large heap may
-    * never run — the round-7 4-5x bench regression). */
-  def clearSessionMemos(): Unit = {
-    lshMemo.clear(); sigMemo.clear(); clusterMemo.clear()
-    graft.operators.SessionMemo.clear()
-  }
-
-  /** Memoized served output (the lshMemo discipline, generalized):
-    * each detector's final bounded pair list, checkpointed SHARED so
-    * dd_recall_report / dd_prefix_stats consume the standalone queries'
-    * materialized results instead of re-running the pipelines (r12's
-    * report regression). */
-  private def served(name: String, f: (SparkSession, String) => DataFrame)(
-      spark: SparkSession, dir: String): DataFrame =
-    graft.operators.SessionMemo.cached(spark, s"served/$name/$dir")(
-      graft.operators.PinnedStages.sharedCheckpoint(f(spark, dir)))
-
+  // Memoized like the LSH pairs, one stage later: the cluster assignment
+  // is consumed by both dd_cluster's own output and pipe_canonicalize's
+  // keeper selection — without the memo the whole propagation loop
+  // re-runs per consumer (round-1 verdict #6's pattern). The label table
+  // is cluster-member-sized (tiny next to the corpus), so the checkpoint
+  // is cheap to hold.
   def ddCluster(spark: SparkSession, dir: String): DataFrame =
-    clusterMemo.getOrElseUpdate((spark.sparkContext.applicationId + "/" + spark.sparkContext.startTime, dir),
+    graft.operators.SessionMemo.cached(spark, s"dd/cluster/$dir")(
       graft.operators.PinnedStages.sharedCheckpoint(computeDdCluster(spark, dir)))
 
   private def computeDdCluster(spark: SparkSession, dir: String): DataFrame = {
@@ -1623,10 +1601,9 @@ object DedupQueries {
   // pair set plus one 1-row baseline-size scalar (allowlisted).
   def ddRecallReport(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    // Every method consumed through the served-output memo (ddMinhashLsh
-    // through its own lshMemo): in a catalog pass the standalone queries
-    // already materialized these exact relations — the report joins the
-    // memos, it never re-runs the detector pipelines.
+    // Every method consumed through a session memo: in a catalog pass the
+    // standalone queries already materialized these exact relations — the
+    // report joins the memos, it never re-runs the detector pipelines.
     val exact = served("dd_ngram_jaccard", ddNgramJaccard _)(spark, dir)
       .select(col("doc_a"), col("doc_b"))
     val methods: Seq[(String, DataFrame)] = Seq(

@@ -53,34 +53,28 @@ object PcaQueries {
       .repartition(spark.sparkContext.defaultParallelism)
       .createOrReplaceTempView("embeddings")
 
-  // Session-scoped memo (r11): the three catalog queries (project / top2 /
-  // topk) share ONE covariance pass and one component chain per
-  // (session, dir) — deflation is a prefix property (component k does not
-  // depend on how many more will be trained), so serving top2 from the
-  // topk chain is bit-identical to training it alone. The
-  // dd_minhash/TokenizerQueries memo discipline; Bench clears it between
-  // passes so every pass pays the real training cost.
-  private val componentMemo = scala.collection.mutable.Map[
-    (String, String), (Array[Array[Long]], Seq[Array[Long]])]()
+  // The three catalog queries (project / top2 / topk) share ONE
+  // covariance pass and one component chain per session and dir.
+  // Deflation is a prefix property (component i depends only on
+  // components 0..i-1, not on how many more will be trained), so serving
+  // top2 from the topk chain is bit-identical to training it alone.
+  private def cov(spark: SparkSession, dir: String): Array[Array[Long]] =
+    graft.operators.SessionMemo.cached(spark, s"pca/cov/$dir") {
+      viewEmb(spark, dir); covScaled(spark)
+    }
 
-  private[graft] def clearSessionMemos(): Unit =
-    synchronized { componentMemo.clear() }
+  private def component(spark: SparkSession, dir: String, i: Int): Array[Long] =
+    graft.operators.SessionMemo.cached(spark, s"pca/component/$i/$dir") {
+      iterate(cov(spark, dir), (0 until i).map(component(spark, dir, _)))
+    }
 
-  /** First `k` components for the catalog dir, training only what the
-    * memo does not already hold. */
+  /** Forwards to [[graft.operators.SessionMemo.clear]]; kept because the
+    * perfbench catalog workload clears by family name. */
+  private[graft] def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
+
+  /** First `k` components for the catalog dir. */
   private def trainedComponents(spark: SparkSession, dir: String,
-      k: Int): Seq[Array[Long]] = synchronized {
-    val key = (spark.sparkContext.applicationId + "/" +
-      spark.sparkContext.startTime, dir)
-    val (c, comps) = componentMemo.getOrElse(key, {
-      viewEmb(spark, dir)
-      (covScaled(spark), Seq.empty[Array[Long]])
-    })
-    var cs = comps
-    while (cs.size < k) cs = cs :+ iterate(c, cs)
-    componentMemo(key) = (c, cs)
-    cs.take(k)
-  }
+      k: Int): Seq[Array[Long]] = (0 until k).map(component(spark, dir, _))
 
   /** Power iteration, orthogonalized after each normalization against
     * every PRIOR component in order (the sequential deflation that

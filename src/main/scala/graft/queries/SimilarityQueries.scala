@@ -23,15 +23,15 @@ object SimilarityQueries {
   private def viewEmb(spark: SparkSession, dir: String): Unit =
     spark.read.parquet(s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
 
-  // Session memos (now [[graft.operators.SessionMemo]], which evicts
-  // stopped sessions — ADVICE r12): the graph-ANN build is shared by
-  // the three nsw/hnsw/diverse pipelines, and every report-evaluated
-  // method's SERVED output is shared so ann_recall_report consumes the
-  // standalone queries' materialized results instead of re-serving
-  // (r12's 6.2× report regression). Bench clears between passes so
-  // every pass pays real cost.
-  private[graft] def clearSessionMemos(): Unit =
-    graft.operators.SessionMemo.clear()
+  /** Forwards to [[graft.operators.SessionMemo.clear]]; kept because the
+    * perfbench catalog workload clears by family name. */
+  private[graft] def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
+
+  // Session memos: the graph-ANN build is shared by the three
+  // nsw/hnsw/diverse pipelines, and every report-evaluated method's
+  // SERVED output is shared so ann_recall_report consumes the standalone
+  // queries' materialized results instead of re-serving (r12's 6.2×
+  // report regression).
 
   /** Memoized served output: each method's final (q_id, vec_id, …)
     * relation — a few dozen rows — checkpointed SHARED so it survives

@@ -44,27 +44,21 @@ object SketchQueries {
     * set-algebra queries (kmv_intersect, hll_union) sketch. Built and
     * pinned once per (session, dir): the shingle explode is each query's
     * dominant cost, and the sets it produces are identical, so the
-    * second consumer's marginal cost drops to the sketch math (the
-    * dd_minhash pair-memo discipline; Bench clears between passes). */
-  private val shingleMemo = scala.collection.mutable.Map[
-    (String, String), org.apache.spark.sql.DataFrame]()
-
-  private[graft] def clearSessionMemos(): Unit = {
-    shingleMemo.clear()
-    graft.operators.SessionMemo.clear()
-  }
-
+    * second consumer's marginal cost drops to the sketch math. */
   private def langShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleMemo.getOrElseUpdate(
-      (spark.sparkContext.applicationId + "/" + spark.sparkContext.startTime, dir), {
-        viewDocs(spark, dir)
-        graft.operators.PinnedStages.sharedCheckpoint(spark.sql(
-          s"""SELECT DISTINCT lang, word
-             |FROM (SELECT lang, ${PipelineQueries.shingleSpark("ws")} AS gs
-             |      FROM (SELECT lang, split(text, ' ') AS ws FROM documents)
-             |      WHERE size(ws) >= 5)
-             |LATERAL VIEW explode(gs) AS word""".stripMargin))
-      })
+    graft.operators.SessionMemo.cached(spark, s"sk/shingles/$dir") {
+      viewDocs(spark, dir)
+      graft.operators.PinnedStages.sharedCheckpoint(spark.sql(
+        s"""SELECT DISTINCT lang, word
+           |FROM (SELECT lang, ${PipelineQueries.shingleSpark("ws")} AS gs
+           |      FROM (SELECT lang, split(text, ' ') AS ws FROM documents)
+           |      WHERE size(ws) >= 5)
+           |LATERAL VIEW explode(gs) AS word""".stripMargin))
+    }
+
+  /** Forwards to [[graft.operators.SessionMemo.clear]]; kept because the
+    * perfbench catalog workload clears by family name. */
+  private[graft] def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
 
   // ── sk_hll_distinct ★ — per-language HLL vocabulary estimate ─────────
   //

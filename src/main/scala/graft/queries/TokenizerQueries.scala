@@ -91,17 +91,9 @@ object TokenizerQueries {
 
   final case class Merge(idx: Int, pair: String, merged: String, count: Long)
 
-  // Session-scoped memo: text_bpe_train and text_bpe_encode share one
-  // training run per (session, dir) — the dd_minhash_lsh/dd_cluster
-  // producer/consumer discipline. Bench clears it between passes so every
-  // pass pays the real training cost.
-  private val mergeMemo =
-    scala.collection.mutable.Map[(String, String), Seq[Merge]]()
-
-  private[graft] def clearSessionMemos(): Unit = {
-    mergeMemo.clear()
-    graft.operators.SessionMemo.clear()
-  }
+  /** Forwards to [[graft.operators.SessionMemo.clear]]; kept because the
+    * perfbench catalog workload clears by family name. */
+  private[graft] def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
 
   private def viewDocs(spark: SparkSession, dir: String): Unit =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -440,10 +432,12 @@ object TokenizerQueries {
   private[graft] def encodeExpr(merges: Seq[Merge], col: String): String =
     merges.foldLeft(col)((e, m) => s"replace($e, '${m.pair}', '${m.merged}')")
 
-  private def trainMerges(spark: SparkSession, dir: String): Seq[Merge] = {
-    val key = (spark.sparkContext.applicationId + "/" + spark.sparkContext.startTime, dir)
-    mergeMemo.getOrElseUpdate(key, { viewDocs(spark, dir); trainMergesOnView(spark) })
-  }
+  /** One training run per session and dir, shared by text_bpe_train and
+    * text_bpe_encode. */
+  private def trainMerges(spark: SparkSession, dir: String): Seq[Merge] =
+    graft.operators.SessionMemo.cached(spark, s"bpe/merges/$dir") {
+      viewDocs(spark, dir); trainMergesOnView(spark)
+    }
 
   // ── text_bpe_train ★ — the learned merge table itself ────────────────
   def textBpeTrain(spark: SparkSession, dir: String): DataFrame = {

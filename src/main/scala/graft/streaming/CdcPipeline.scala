@@ -190,10 +190,8 @@ object CdcPipeline {
     * never duplicating (G1). */
   final class ParquetPartitionedSink(sinkDir: String) extends CdcSink {
     override def writeBatch(batch: Dataset[KeyedUpdate], batchId: Long): Unit = {
-      batch.sparkSession.conf
-        .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       batch.toDF().withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(s"$sinkDir/log")
     }

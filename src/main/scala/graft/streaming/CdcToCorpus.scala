@@ -165,10 +165,9 @@ object CdcToCorpus {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[DocUpdate], batchId: Long) =>
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch.toDF().withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
           .parquet(s"$sinkDir/log")
         ()
       }

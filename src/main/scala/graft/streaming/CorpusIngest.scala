@@ -95,16 +95,16 @@ object CorpusIngest {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val pinned = batch.pinned()
         pinned
           .select("doc_id", "content_hash", "lang", "source", "n_words", "quality")
           .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(docSinkDir)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(docSinkDir)
         graft.queries.CorpusRewriteQueries.chunksOf(pinned)
           .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(chunkSinkDir)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(chunkSinkDir)
         pinned.unpersist()
         ()
       }

@@ -67,14 +67,11 @@ object StreamingDecontaminate {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The batch runs on the stream's CLONED session — set the dynamic
-        // overwrite mode there, or the write is a static overwrite that
-        // wipes every earlier batch's partition.
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        // Dynamic overwrite replaces only this batch's partition; a static
+        // overwrite would wipe every earlier batch's partition.
         clean(batch, evalSh)
           .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(sinkDir)
       }

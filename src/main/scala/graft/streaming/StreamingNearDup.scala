@@ -89,15 +89,14 @@ object StreamingNearDup {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[BandVote], batchId: Long) =>
         // Admit = won every band. Idempotent per batch id on replay.
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch.groupBy(col("docId").as("doc_id"), col("lang"))
           .agg(count(lit(1)).as("bands"),
             sum(when(col("won"), 1).otherwise(0)).as("wins"))
           .filter(col("wins") === col("bands"))
           .drop("bands", "wins")
           .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
           .parquet(sinkDir)
         ()
       }

@@ -101,11 +101,9 @@ object StreamingQualityGate {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         gate(batch, resolved)
           .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(sinkDir)
         ()

@@ -58,11 +58,12 @@ object IncrementalDedup {
   }
 
   /** Build (overwrite) the store from the base corpus. The old claims
-    * tree is deleted EXPLICITLY first: several streaming modules set
-    * session-wide `partitionOverwriteMode=dynamic`, under which a
-    * partitioned Overwrite only replaces the bucket partitions present
-    * in the new data — a shrunken base corpus would leave stale buckets
-    * behind and produce phantom pairs. */
+    * tree is deleted EXPLICITLY first: the streaming sinks pass
+    * `partitionOverwriteMode=dynamic` per write, but a user may still set
+    * it on the session, under which a partitioned Overwrite only
+    * replaces the bucket partitions present in the new data — a shrunken
+    * base corpus would leave stale buckets behind and produce phantom
+    * pairs. */
   def buildStore(spark: SparkSession, baseDocs: DataFrame, storeDir: String): Unit = {
     val a = anchors(spark, baseDocs)
       .withColumn("bucket", pmod(col("h"), lit(Buckets.toLong)))

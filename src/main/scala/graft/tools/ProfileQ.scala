@@ -28,17 +28,7 @@ object ProfileQ {
         println(f"[profileq] pass$pass $n rows=$cnt build=$tBuild%.3f total=$tAll%.3f")
         graft.operators.PinnedStages.sweepTransient(spark)
       }
-      // Mirror Bench's between-pass reset EXACTLY: releasing shared pins
-      // while any memo registry still holds its DataFrames leaves stale
-      // checkpoint references that fail with CHECKPOINT_RDD_BLOCK_ID_NOT_
-      // FOUND on the next pass (measured the hard way, r15).
-      graft.queries.DedupQueries.clearSessionMemos()
-      graft.queries.TokenizerQueries.clearSessionMemos()
-      graft.queries.PcaQueries.clearSessionMemos()
-      graft.queries.SketchQueries.clearSessionMemos()
-      graft.queries.SimilarityQueries.clearSessionMemos()
-      graft.operators.AsOfJoin.clearBoundsCache()
-      graft.operators.PinnedStages.releaseShared(spark)
+      graft.operators.SessionMemo.reset(spark)
     }
     spark.stop()
   }
