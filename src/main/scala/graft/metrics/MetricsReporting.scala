@@ -13,9 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
 /** Metrics interval record — the engine's self-reported health surface,
   * mirroring the reference's interval metrics (`metric_reporting/
   * metrics.py:5-53`): produced counts per operation, tombstones, source
-  * read totals, end-to-end latency, and interval bounds. Collected from
-  * Structured Streaming progress events instead of hand-maintained
-  * accumulators (`accumulator.py:53-243`). */
+  * read totals, batch duration, state rows, and interval bounds. The
+  * reference's end-to-end latency and lag fields are not carried yet.
+  * Collected from Structured Streaming progress events instead of
+  * hand-maintained accumulators (`accumulator.py:53-243`). */
 final case class IntervalMetrics(
     metricsNamespace: String,
     processHostname: String,

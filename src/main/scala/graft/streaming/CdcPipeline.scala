@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.fixtures.SyntheticCdc
@@ -338,11 +339,19 @@ object CdcPipeline {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
+      // The batch is re-homed on the caller's session (Bridge.onSession):
+      // its jobs, the stateful stage that `count` materializes included,
+      // then reuse the executors' class loader and codegen cache from one
+      // poll cycle to the next instead of recompiling per query start.
+      // `count` runs the stateful stage whatever the sink does, so the
+      // state commit never depends on the sink reading every row; the
+      // cache is released even when the sink throws.
       .foreachBatch { (batch: Dataset[KeyedUpdate], batchId: Long) =>
-        val b = batch.persist()
-        produced.addAndGet(b.count())
-        sink.writeBatch(b, batchId)
-        b.unpersist()
+        val b = Bridge.onSession(spark, batch.toDF()).as[KeyedUpdate].persist()
+        try {
+          produced.addAndGet(b.count())
+          sink.writeBatch(b, batchId)
+        } finally b.unpersist()
         ()
       }
       .start()

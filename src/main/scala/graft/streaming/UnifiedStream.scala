@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.Trigger
 
 /** The unified multi-table stream (SURVEY §1.1 "unified topic",
@@ -16,6 +17,13 @@ import org.apache.spark.sql.streaming.Trigger
   * per-table source order). The strict-order production assert
   * (`main.py:329-331`) becomes [[UnifiedStream.orderValidation]], run on
   * the engine's own output like the reference's validators.
+  *
+  * Every publisher's `foreachBatch` first re-homes its window on the
+  * caller's session ([[org.apache.spark.sql.graft.Bridge.onSession]]), so
+  * the window's sort and write jobs reuse the executors' class loader and
+  * codegen cache across drains instead of recompiling for each query
+  * start; the query itself, and with it every listener on
+  * `spark.streams`, stays on the caller's session.
   */
 object UnifiedStream {
 
@@ -89,7 +97,7 @@ object UnifiedStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeOrderedWindow(batch, batchId, sinkDir)
+        writeOrderedWindow(Bridge.onSession(spark, batch), batchId, sinkDir)
       }
       .start()
     query.awaitTermination()
@@ -113,7 +121,7 @@ object UnifiedStream {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeOrderedWindow(batch, batchId, sinkDir)
+        writeOrderedWindow(Bridge.onSession(spark, batch), batchId, sinkDir)
       }
       .start()
     query.processAllAvailable()
@@ -145,7 +153,7 @@ object UnifiedStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writePartitionedWindow(batch, batchId, sinkDir, partitions)
+        writePartitionedWindow(Bridge.onSession(spark, batch), batchId, sinkDir, partitions)
       }
       .start()
     query.awaitTermination()
@@ -168,7 +176,7 @@ object UnifiedStream {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writePartitionedWindow(batch, batchId, sinkDir, partitions)
+        writePartitionedWindow(Bridge.onSession(spark, batch), batchId, sinkDir, partitions)
       }
       .start()
     query.processAllAvailable()

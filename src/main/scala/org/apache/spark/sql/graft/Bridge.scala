@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ClassicConversions, ExpressionUtils}
 
-/** Column ↔ Catalyst Expression bridge.
+/** Bridge to Spark's `private[sql]` API: Column ↔ Catalyst Expression,
+  * session function registration, and re-homing a DataFrame on a session.
   *
   * `org.apache.spark.sql.classic.ExpressionUtils` is `private[sql]` in
   * Spark 4, so third-party Catalyst expressions need this one-file shim in
@@ -22,4 +23,26 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
+
+  /** `df`'s rows as a DataFrame planned in `spark`: a scan over
+    * `df.queryExecution.toRdd`, so every job an action on the result
+    * submits runs under `spark`'s artifact state instead of `df`'s.
+    *
+    * Why a streaming micro-batch is re-homed: each query start clones the
+    * caller's session with a fresh artifact UUID, and a `foreachBatch`
+    * batch is planned in that clone. Executors build one isolated session
+    * and class loader per artifact UUID, and Spark's codegen cache is keyed
+    * by (class loader, source), so on the clone every restart of a stream
+    * — every poll cycle of a `Trigger.AvailableNow` publisher — compiles
+    * all of its generated classes again although their source is
+    * unchanged. Re-homed, a batch's jobs (the stateful stage its first
+    * action materializes included) share one class loader and codegen
+    * cache across calls.
+    *
+    * Only the batch is re-homed: the query itself still starts from the
+    * caller's session, so listeners on `spark.streams` keep seeing every
+    * batch's progress, state-operator and observed metrics. */
+  def onSession(spark: SparkSession, df: DataFrame): DataFrame =
+    ClassicConversions.castToImpl(spark)
+      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
 }

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.CdcPipeline
+import graft.streaming.{BrokerSink, CdcPipeline, LogBroker}
 
 /** Static in-JVM broker stub for the Kafka-shaped sink test: producers
   * created on (local-mode) executors record into one shared queue. */
@@ -26,6 +28,12 @@ object RecordingBroker {
     override def flush(): Unit = ()
     override def close(): Unit = ()
   }
+}
+
+/** A sink whose every write fails, as a broker outage would. */
+object FailingSink extends CdcPipeline.CdcSink {
+  override def writeBatch(batch: Dataset[CdcPipeline.KeyedUpdate],
+      batchId: Long): Unit = throw new RuntimeException("sink unavailable")
 }
 
 /** End-to-end Structured Streaming pipeline tests: the staged change feed
@@ -201,6 +209,42 @@ class CdcPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("seqvalNum") === -1L).count() === 1)
     assert(CdcPipeline.compactedState(spark, sink)
       .filter(col("userId") === -1L).count() === 0)
+  }
+
+  test("a failing sink leaves no cached batch behind") {
+    val feed = s"$work/feed_fail"
+    CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 2)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[StreamingQueryException] {
+      CdcPipeline.run(spark, feed, s"$work/ckpt_fail", FailingSink)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
+  test("warm poll cycles compile no generated classes") {
+    // Each cycle is one run call that publishes one new poll window, the
+    // shape of a follower polling the change table. Generated code is the
+    // same every cycle, so once two cycles have run, a cycle must find all
+    // of it in the codegen cache.
+    val feed = s"$work/feed_warm"; val ckpt = s"$work/ckpt_warm"
+    val broker = "warm-broker"; val topic = "t-warm"
+    val sink = BrokerSink.transactional(broker, topic)
+    val b = LogBroker.get(broker)
+    def cycle(window: Int): Long = {
+      CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 5,
+        Some(window until window + 1))
+      val published = b.readCommittedAll(topic).size
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      CdcPipeline.run(spark, feed, ckpt, sink)
+      assert(b.readCommittedAll(topic).size > published,
+        s"window $window published nothing")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    }
+    (0 until 2).foreach(cycle)
+    (2 until 5).foreach { w =>
+      assert(cycle(w) === 0L, s"window $w recompiled generated classes")
+    }
+    LogBroker.drop(broker)
   }
 
   test("tombstones follow deletes in the published log (G4)") {

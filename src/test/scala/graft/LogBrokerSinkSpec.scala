@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.BeforeAndAfterAll
@@ -30,6 +30,16 @@ object CrashOnce {
     }
     override def flush(): Unit = inner.flush()
     override def close(): Unit = inner.close()
+  }
+}
+
+/** Passes every batch to `inner` and records its batch id. */
+final class BatchIdRecorder(inner: CdcPipeline.CdcSink) extends CdcPipeline.CdcSink {
+  val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  override def writeBatch(batch: Dataset[CdcPipeline.KeyedUpdate],
+      batchId: Long): Unit = {
+    ids.add(batchId)
+    inner.writeBatch(batch, batchId)
   }
 }
 
@@ -235,6 +245,39 @@ class LogBrokerSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(b.compactedView(topic).exists(r => new String(r.key, "UTF-8") == "-1"))
     assert(BrokerSink.compactedState(spark, broker, topic)
       .filter(col("userId") === -1L).count() === 0)
+    LogBroker.drop(broker)
+  }
+
+  test("partition -> transactional.id contract holds on a session with AQE on") {
+    // Batches run their sink work on the caller's session, so its adaptive
+    // execution must not coalesce or split the sink's fixed 8-bucket
+    // repartition: a bucket renumbered by AQE would break replay fencing.
+    val aqe = spark.newSession()
+    aqe.conf.set("spark.sql.adaptive.enabled", "true")
+    val feed = s"$work/feed-aqe"; val broker = "aqe-broker"; val topic = "t-aqe"
+    CdcPipeline.stageChangeFeed(aqe, sfDir, feed, nChunks = 3)
+    val sink = new BatchIdRecorder(BrokerSink.transactional(broker, topic))
+    CdcPipeline.run(aqe, feed, s"$work/ckpt-aqe", sink)
+
+    val b = LogBroker.get(broker)
+    import scala.jdk.CollectionConverters._
+    val ids = sink.ids.asScala.toSeq
+    assert(ids.size === 3)
+    ids.foreach { id =>
+      (0 until 8).foreach { p =>
+        assert(b.hasCommitted(s"graft-$topic-b$id-p$p"), s"batch $id partition $p")
+      }
+      assert(!b.hasCommitted(s"graft-$topic-b$id-p8"), s"batch $id has a 9th partition")
+    }
+
+    // The compacted broker state equals the parquet-sink oracle.
+    CdcPipeline.runToParquet(aqe, feed, s"$work/sink-aqe", s"$work/ckptP-aqe")
+    val cols = Seq("userId", "lsnNum", "commandId", "seqvalNum", "operation",
+      "eventType", "value").map(col)
+    val got = BrokerSink.compactedState(aqe, broker, topic).select(cols: _*)
+    val exp = CdcPipeline.compactedState(aqe, s"$work/sink-aqe").select(cols: _*)
+    assert(got.count() === exp.count())
+    assert(got.except(exp).isEmpty && exp.except(got).isEmpty)
     LogBroker.drop(broker)
   }
 

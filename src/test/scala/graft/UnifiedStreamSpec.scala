@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -31,6 +32,27 @@ class UnifiedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Stages the multi-table source's layout under `base`: `events` as one
+    * change window, `orders` as a 1,500-row snapshot plus a 9-row change
+    * tail. */
+  private def stageSourceBase(base: String): Unit = {
+    CdcPipeline.stageChangeFeed(spark, sfDir, s"$base/events/feed", nChunks = 1)
+    spark.read.parquet(s"$sfDir/orders.parquet")
+      .select(lit(0L).as("lsn_num"), lit(0).as("command_id"),
+        lit(0L).as("seqval_num"), lit(0).as("operation"),
+        col("o_orderkey").as("event_id"), col("o_orderkey").as("user_id"),
+        col("o_orderstatus").as("event_type"), col("o_totalprice").as("value"),
+        col("o_orderpriority").as("props"))
+      .coalesce(2).write.mode("overwrite").parquet(s"$base/orders/snapshot")
+    spark.sql(
+      """SELECT cast(id + 1 as long) AS lsn_num, 0 AS command_id,
+        |       cast(id as long) AS seqval_num, 4 AS operation,
+        |       cast(id as long) AS event_id, cast(id as long) AS user_id,
+        |       'U' AS event_type, cast(id as double) AS value, '' AS props
+        |FROM range(9)""".stripMargin)
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/orders/feed")
+  }
+
   test("two-table unified stream publishes every window in global order") {
     val feedA = s"$work/feedA"; val feedB = s"$work/feedB"
     CdcPipeline.stageChangeFeed(spark, sfDir, feedA, nChunks = 3)
@@ -58,21 +80,7 @@ class UnifiedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The r6 composition: the multi-table DSv2 source (scheduler,
     // pacing, snapshot interleave) upstream of the ordered publisher.
     val base = s"$work/srcbase"
-    CdcPipeline.stageChangeFeed(spark, sfDir, s"$base/events/feed", nChunks = 1)
-    spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(lit(0L).as("lsn_num"), lit(0).as("command_id"),
-        lit(0L).as("seqval_num"), lit(0).as("operation"),
-        col("o_orderkey").as("event_id"), col("o_orderkey").as("user_id"),
-        col("o_orderstatus").as("event_type"), col("o_totalprice").as("value"),
-        col("o_orderpriority").as("props"))
-      .coalesce(2).write.mode("overwrite").parquet(s"$base/orders/snapshot")
-    spark.sql(
-      """SELECT cast(id + 1 as long) AS lsn_num, 0 AS command_id,
-        |       cast(id as long) AS seqval_num, 4 AS operation,
-        |       cast(id as long) AS event_id, cast(id as long) AS user_id,
-        |       'U' AS event_type, cast(id as double) AS value, '' AS props
-        |FROM range(9)""".stripMargin)
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/orders/feed")
+    stageSourceBase(base)
 
     UnifiedStream.runFromSource(spark, base, Seq("orders", "events"),
       s"$work/unified_src", s"$work/ckpt_src", batchSize = 400)
@@ -117,21 +125,7 @@ class UnifiedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the range-partitioned ordered layout — must carry the same
     // end-to-end guarantees the coalesce(1) path proves above.
     val base = s"$work/srcbaseP"
-    CdcPipeline.stageChangeFeed(spark, sfDir, s"$base/events/feed", nChunks = 1)
-    spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(lit(0L).as("lsn_num"), lit(0).as("command_id"),
-        lit(0L).as("seqval_num"), lit(0).as("operation"),
-        col("o_orderkey").as("event_id"), col("o_orderkey").as("user_id"),
-        col("o_orderstatus").as("event_type"), col("o_totalprice").as("value"),
-        col("o_orderpriority").as("props"))
-      .coalesce(2).write.mode("overwrite").parquet(s"$base/orders/snapshot")
-    spark.sql(
-      """SELECT cast(id + 1 as long) AS lsn_num, 0 AS command_id,
-        |       cast(id as long) AS seqval_num, 4 AS operation,
-        |       cast(id as long) AS event_id, cast(id as long) AS user_id,
-        |       'U' AS event_type, cast(id as double) AS value, '' AS props
-        |FROM range(9)""".stripMargin)
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/orders/feed")
+    stageSourceBase(base)
 
     UnifiedStream.runPartitionedFromSource(spark, base, Seq("orders", "events"),
       s"$work/unified_srcP", s"$work/ckpt_srcP", batchSize = 400, partitions = 3)
@@ -151,5 +145,23 @@ class UnifiedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ...and the scale layout's total-order contract holds: zero
     // intra-partition regressions, zero overlapping ranges, per window.
     assert(UnifiedStream.partitionedOrderValidation(spark, s"$work/unified_srcP").count() === 0)
+  }
+
+  test("a warm source-driven drain compiles no generated classes") {
+    // Two drains of the same staged tables, each on a fresh checkpoint and
+    // sink: the second runs the same generated code as the first and must
+    // find all of it in the codegen cache.
+    val base = s"$work/srcbaseW"
+    stageSourceBase(base)
+    def drain(n: Int): Long = {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      UnifiedStream.runFromSource(spark, base, Seq("orders", "events"),
+        s"$work/unified_w$n", s"$work/ckpt_w$n", batchSize = 400)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    }
+    drain(1)
+    assert(drain(2) === 0L)
+    assert(spark.read.parquet(s"$work/unified_w2").count() ===
+      spark.read.parquet(s"$work/unified_w1").count())
   }
 }
