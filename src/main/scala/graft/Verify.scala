@@ -25,7 +25,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       // Drop the query's pinned localCheckpoint blocks (shared dedup
       // memos survive) — see PinnedStages: without the sweep, 90 queries

@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.fixtures.SyntheticCdc
+import graft.sources.CdcTableProvider
 
 /** The CDC publishing pipeline restated as Structured Streaming.
   *
@@ -15,7 +15,7 @@ import graft.fixtures.SyntheticCdc
   * restatement:
   *
   *   - the ordered change feed is a file micro-batch stream (each staged
-  *     file = one poll window; `maxFilesPerTrigger` is the reference's
+  *     file = one poll window, [[MicroBatch.fileSource]]: the reference's
   *     `db_row_batch_size` pacing, E6/E7),
   *   - the envelope projection is the SAME logic as the batch queries
   *     (one definition, two execution modes),
@@ -124,15 +124,11 @@ object CdcPipeline {
       .coalesce(1).write.mode("append").parquet(outDir)
   }
 
-  /** The streaming change feed: B1 operation filter + envelope columns.
-    * `maxFilesPerTrigger 1` = one poll window per micro-batch. */
+  /** The streaming change feed: B1 operation filter + envelope columns,
+    * one poll window per micro-batch. */
   def changeStream(spark: SparkSession, feedDir: String): Dataset[CdcEvent] = {
     import spark.implicits._
-    spark.readStream
-      .schema("lsn_num LONG, command_id INT, seqval_num LONG, operation INT, " +
-        "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
+    MicroBatch.fileSource(spark, CdcTableProvider.schema, feedDir)
       // B1: only PreUpdate images are dropped; Snapshot(0), Delete(1),
       // Insert(2), PostUpdate(4) all publish (`sql_queries.py:265`).
       .filter(col("operation") =!= 3)
@@ -190,12 +186,8 @@ object CdcPipeline {
     * overwrites its own directory only (dynamic partition overwrite),
     * never duplicating (G1). */
   final class ParquetPartitionedSink(sinkDir: String) extends CdcSink {
-    override def writeBatch(batch: Dataset[KeyedUpdate], batchId: Long): Unit = {
-      batch.toDF().withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$sinkDir/log")
-    }
+    override def writeBatch(batch: Dataset[KeyedUpdate], batchId: Long): Unit =
+      MicroBatch.overwriteBatch(batch.toDF(), batchId, s"$sinkDir/log")
   }
 
   /** Per-partition handle to a keyed-record broker (the Kafka seam, A6).
@@ -335,27 +327,16 @@ object CdcPipeline {
         count(when(col("isTombstone"), 1)).as("tombstones"))
       .as[KeyedUpdate]
     val produced = new java.util.concurrent.atomic.AtomicLong(0)
-    val query = updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      // The batch is re-homed on the caller's session (Bridge.onSession):
-      // its jobs, the stateful stage that `count` materializes included,
-      // then reuse the executors' class loader and codegen cache from one
-      // poll cycle to the next instead of recompiling per query start.
-      // `count` runs the stateful stage whatever the sink does, so the
-      // state commit never depends on the sink reading every row; the
-      // cache is released even when the sink throws.
-      .foreachBatch { (batch: Dataset[KeyedUpdate], batchId: Long) =>
-        val b = Bridge.onSession(spark, batch.toDF()).as[KeyedUpdate].persist()
-        try {
-          produced.addAndGet(b.count())
-          sink.writeBatch(b, batchId)
-        } finally b.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    // `count` runs the stateful stage whatever the sink does, so the
+    // state commit never depends on the sink reading every row; the
+    // cache is released even when the sink throws.
+    MicroBatch.drainEach(updates, checkpointDir) { (batch, batchId) =>
+      val b = batch.as[KeyedUpdate].persist()
+      try {
+        produced.addAndGet(b.count())
+        sink.writeBatch(b, batchId)
+      } finally b.unpersist()
+    }
 
     // E8 epilogue: this poll cycle produced nothing — if the previous
     // publish is stale, emit the ceiling heartbeat so downstream progress
@@ -364,10 +345,7 @@ object CdcPipeline {
     // the cycle boundary is the natural point).
     heartbeat.foreach { hb =>
       if (produced.get() == 0L) {
-        val ceiling = spark.read
-          .schema("lsn_num LONG, command_id INT, seqval_num LONG, operation INT, " +
-            "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-          .parquet(feedDir)
+        val ceiling = spark.read.schema(CdcTableProvider.schema).parquet(feedDir)
           .agg(max(col("lsn_num"))).head()
         val ceilingLsn = if (ceiling.isNullAt(0)) 0L else ceiling.getLong(0)
         graft.model.Policies.heartbeatIndex(hb.lastProducedEpochSec,

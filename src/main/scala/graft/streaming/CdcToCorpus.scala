@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** CDC → CURATED CORPUS, end to end: the composition the two halves of
   * this repo exist for. Documents arrive as CDC changes (inserts,
@@ -114,11 +114,8 @@ object CdcToCorpus {
 
   def docStream(spark: SparkSession, feedDir: String): Dataset[DocEvent] = {
     import spark.implicits._
-    spark.readStream
-      .schema("doc_id LONG, lsn_num LONG, seqval_num LONG, operation INT, " +
-        "text STRING, lang STRING, source STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
+    MicroBatch.fileSource(spark, "doc_id LONG, lsn_num LONG, seqval_num LONG, " +
+        "operation INT, text STRING, lang STRING, source STRING", feedDir)
       .select(col("doc_id").as("docId"), col("lsn_num").as("lsnNum"),
         col("seqval_num").as("seqvalNum"), col("operation"),
         col("text"), col("lang"), col("source"))
@@ -158,22 +155,9 @@ object CdcToCorpus {
     * shape). Returns when all currently-staged data is processed; calling
     * again after staging more files RESUMES from the checkpoint. */
   def run(spark: SparkSession, feedDir: String, checkpointDir: String,
-      sinkDir: String): Unit = {
-    val query = keyedDocUpdates(docStream(spark, feedDir))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[DocUpdate], batchId: Long) =>
-        batch.toDF().withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$sinkDir/log")
-        ()
-      }
-      .start()
-    query.awaitTermination()
-  }
+      sinkDir: String): Unit =
+    MicroBatch.drainEach(keyedDocUpdates(docStream(spark, feedDir)), checkpointDir)(
+      MicroBatch.overwriteBatch(_, _, s"$sinkDir/log"))
 
   /** Compact the published log to the current documents table (A7/E3):
     * latest row per doc, tombstoned keys dropped. */

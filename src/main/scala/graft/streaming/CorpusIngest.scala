@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Pin.PinSyntax
 
 /** Continuous corpus ingestion with streaming dedup — the streaming form
@@ -43,25 +42,15 @@ object CorpusIngest {
   def run(spark: SparkSession, dropDir: String, sinkDir: String,
       checkpointDir: String, minQuality: Double = 0.5): Unit = {
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
-    val admitted = featurize(incoming)
+    val admitted = featurize(MicroBatch.fileSource(spark, schema, dropDir))
       .filter(col("quality") >= minQuality)
       // State-store dedup on the content hash: survives across batches
       // AND across restarts (checkpoint). First writer wins, matching
       // the batch keeper = min doc_id under ordered arrival.
       .dropDuplicates("content_hash")
-    val query = admitted
-      .select("doc_id", "content_hash", "lang", "source", "n_words", "quality")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", sinkDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(
+      admitted.select("doc_id", "content_hash", "lang", "source", "n_words", "quality"),
+      sinkDir, checkpointDir)
   }
 
   /** RAG-ingest composition (r11): the same gate → state-store dedup
@@ -73,8 +62,8 @@ object CorpusIngest {
     * chunks commit together.
     *
     * Exactly-once: foreachBatch bypasses the file sink's commit log, so
-    * both writes are idempotent `batch_id=N` partition OVERWRITES (the
-    * [[StreamingDecontaminate]] discipline) — a batch replayed after a
+    * both writes are idempotent `batch_id=N` partition OVERWRITES
+    * ([[MicroBatch.overwriteBatch]]) — a batch replayed after a
     * crash-before-checkpoint rewrites its own partition and nothing
     * else. The admitted batch pins once (`localCheckpoint`) because two
     * sinks consume it; the stateful dedup must not recompute per sink.
@@ -84,32 +73,17 @@ object CorpusIngest {
       chunkSinkDir: String, checkpointDir: String,
       minQuality: Double = 0.5): Unit = {
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
-    val admitted = featurize(incoming)
+    val admitted = featurize(MicroBatch.fileSource(spark, schema, dropDir))
       .filter(col("quality") >= minQuality)
       .dropDuplicates("content_hash")
-    val query = admitted.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pinned = batch.pinned()
-        pinned
-          .select("doc_id", "content_hash", "lang", "source", "n_words", "quality")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(docSinkDir)
-        graft.queries.CorpusRewriteQueries.chunksOf(pinned)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(chunkSinkDir)
-        pinned.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainEach(admitted, checkpointDir) { (batch, batchId) =>
+      val pinned = batch.pinned()
+      MicroBatch.overwriteBatch(pinned.select("doc_id", "content_hash", "lang",
+        "source", "n_words", "quality"), batchId, docSinkDir)
+      MicroBatch.overwriteBatch(graft.queries.CorpusRewriteQueries.chunksOf(pinned),
+        batchId, chunkSinkDir)
+      pinned.unpersist()
+    }
   }
 
   /** The admission ledger: per language, how many documents the stream

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming multi-touch attribution — the stateful streaming form of the
   * batch `e15_attribution` operator: events arrive continuously; each
@@ -60,9 +60,7 @@ object StreamingAttribution {
     import spark.implicits._
     val schema =
       "user_id LONG, event_type STRING, t_us LONG, event_id LONG, value_cents LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("user_id", "t_us", "event_id", "event_type", "value_cents")
       .as[(Long, Long, Long, String, Long)]
@@ -76,14 +74,7 @@ object StreamingAttribution {
           state.update(next)
           out.iterator
       }
-    val q = rows.writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows, sinkDir, checkpointDir)
   }
 
   /** The continuously-maintained report from the drained purchases —

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming co-purchase pair maintenance — the incremental feed of
   * `d10_basket_rules`' pair-support table: lineitem rows arrive
@@ -53,10 +53,7 @@ object StreamingCoPurchase {
   def run(spark: SparkSession, dropDir: String, sinkDir: String,
       checkpointDir: String): Unit = {
     import spark.implicits._
-    val incoming = spark.readStream
-      .schema("l_orderkey LONG, l_partkey LONG")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, "l_orderkey LONG, l_partkey LONG", dropDir)
     val rows = incoming
       .selectExpr("l_orderkey", "l_partkey")
       .as[(Long, Long)]
@@ -70,15 +67,7 @@ object StreamingCoPurchase {
           state.update(next)
           out.iterator
       }
-    val q = rows.toDF("item_a", "item_b")
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append)
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows.toDF("item_a", "item_b"), sinkDir, checkpointDir)
   }
 
   /** Pair supports from the append sink — the batch `pair` CTE's shape

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Pin.PinSyntax
 
 /** Streaming eval-set decontamination: the batch `pipe_decontaminate`
@@ -14,7 +13,7 @@ import graft.operators.Pin.PinSyntax
   *    release cadence, not per batch), so this needs NO state store at
   *    all — each micro-batch is a stream-static semi join against the
   *    materialized eval shingle set, and exactly-once falls out of the
-  *    file sink's idempotent commit protocol alone. Compare
+  *    idempotent per-batch partition overwrite alone. Compare
   *    [[CorpusIngest]]/[[StreamingNearDup]], where the claim set GROWS
   *    with the stream and genuinely needs keyed state.
   *  - The eval shingle set materializes once at stream start
@@ -49,8 +48,7 @@ object StreamingDecontaminate {
     * Exactly-once: foreachBatch bypasses the file sink's commit log, so a
     * crash between the write and the checkpoint commit would replay the
     * batch — each batch therefore OVERWRITES its own `batch_id=N`
-    * partition (the same idempotence scheme as
-    * [[CdcPipeline.ParquetPartitionedSink]]), making replays no-ops.
+    * partition ([[MicroBatch.overwriteBatch]]), making replays no-ops.
     * The stream schema comes from the EVAL set (always present), so the
     * service boots cleanly on an empty drop directory. */
   def run(spark: SparkSession, dropDir: String, evalDir: String,
@@ -58,24 +56,9 @@ object StreamingDecontaminate {
     val evalDocs = spark.read.parquet(evalDir)
     val evalSh = shingled(evalDocs)
       .select(col("sh")).distinct().pinned()
-    val in = spark.readStream
-      .schema(evalDocs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dropDir)
-    val q = in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Dynamic overwrite replaces only this batch's partition; a static
-        // overwrite would wipe every earlier batch's partition.
-        clean(batch, evalSh)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainEach(MicroBatch.fileSource(spark, evalDocs.schema, dropDir),
+        checkpointDir) { (batch, batchId) =>
+      MicroBatch.overwriteBatch(clean(batch, evalSh), batchId, sinkDir)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming conversion-funnel tracking — the stateful streaming form of
   * the batch `e10_funnel` operator: events arrive continuously and each
@@ -66,9 +66,7 @@ object StreamingFunnel {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("user_id", "event_type", "t_us", "event_id")
       .as[(Long, String, Long, Long)]
@@ -85,16 +83,8 @@ object StreamingFunnel {
               Option(next.t2).filter(_ >= 0), Option(next.t3).filter(_ >= 0)))
           else Iterator.empty
       }
-    val q = rows.toDF("user_id", "stage_reached", "signup_us",
-        "first_view_us", "first_purchase_us")
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append)
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows.toDF("user_id", "stage_reached", "signup_us",
+        "first_view_us", "first_purchase_us"), sinkDir, checkpointDir)
   }
 
   /** The latest funnel position per user from the append sink: the fold

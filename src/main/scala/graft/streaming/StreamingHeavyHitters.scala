@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.expr.MisraGries
 
@@ -94,9 +94,7 @@ object StreamingHeavyHitters {
     import spark.implicits._
     graft.expr.GraftFunctions.register(spark)
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val reports = gramize(incoming)
       .as[(String, String)]
       .groupByKey(_._1)
@@ -105,15 +103,7 @@ object StreamingHeavyHitters {
         (lang: String, rows: Iterator[(String, String)], state: GroupState[MgState]) =>
           foldBatch(lang, rows.map(_._2), state)
       }
-    val query = reports.toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", sinkDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(reports, sinkDir, checkpointDir)
   }
 
   /** The latest report per language from the sink (highest seq). */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming growth accounting — the stateful streaming form of the
   * batch `e17_lifecycle` operator: events arrive continuously and each
@@ -95,9 +95,7 @@ object StreamingLifecycle {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("user_id", s"t_us div $WeekUs AS wk",
         "event_type = '__flush' AS flush")
@@ -111,15 +109,7 @@ object StreamingLifecycle {
           next.foreach(state.update)
           out.iterator
       }
-    val q = rows.toDF("user_id", "wk", "state")
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append)
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows.toDF("user_id", "wk", "state"), sinkDir, checkpointDir)
   }
 
   /** The weekly ledger from the append sink, batch-shaped: weeks

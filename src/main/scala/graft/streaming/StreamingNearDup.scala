@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming NEAR-duplicate rejection — the streaming form of the batch
   * `dd_minhash_lsh` operator: documents arrive continuously, each is
@@ -61,9 +61,7 @@ object StreamingNearDup {
     import spark.implicits._
     graft.expr.GraftFunctions.register(spark)
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT"
-    val bands = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val bands = MicroBatch.fileSource(spark, schema, dropDir)
       .select(col("doc_id"), col("lang"),
         expr("minhash_signature(text)").as("mh"))
       .select(col("doc_id"), col("lang"),
@@ -83,24 +81,14 @@ object StreamingNearDup {
           claimBand(rows.toSeq, state)
       }
 
-    val query = votes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[BandVote], batchId: Long) =>
-        // Admit = won every band. Idempotent per batch id on replay.
-        batch.groupBy(col("docId").as("doc_id"), col("lang"))
-          .agg(count(lit(1)).as("bands"),
-            sum(when(col("won"), 1).otherwise(0)).as("wins"))
-          .filter(col("wins") === col("bands"))
-          .drop("bands", "wins")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(sinkDir)
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainEach(votes, checkpointDir) { (batch, batchId) =>
+      // Admit = won every band. Idempotent per batch id on replay.
+      val admitted = batch.groupBy(col("docId").as("doc_id"), col("lang"))
+        .agg(count(lit(1)).as("bands"),
+          sum(when(col("won"), 1).otherwise(0)).as("wins"))
+        .filter(col("wins") === col("bands"))
+        .drop("bands", "wins")
+      MicroBatch.overwriteBatch(admitted, batchId, sinkDir)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming exact-PASSAGE duplicate detection — the streaming form of
   * the batch `dd_substring` operator: documents arrive continuously,
@@ -74,9 +74,7 @@ object StreamingPassageDedup {
     import spark.implicits._
     graft.expr.GraftFunctions.register(spark)
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT"
-    val anchors = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val anchors = MicroBatch.fileSource(spark, schema, dropDir)
       .select(col("doc_id").as("docId"),
         explode(expr("substring_anchors(text)")).as("h"))
       .as[AnchorRow]
@@ -89,15 +87,7 @@ object StreamingPassageDedup {
           observe(h, rows.toSeq, state)
       }
 
-    val query = events.toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", sinkDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(events, sinkDir, checkpointDir)
   }
 
   /** The confirmed-pair view over the event sink: pairs connected by ≥2

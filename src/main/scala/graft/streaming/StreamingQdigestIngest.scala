@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.tools.SketchStore
 
@@ -28,17 +27,10 @@ object StreamingQdigestIngest {
   def run(spark: SparkSession, dropDir: String, storeDir: String,
       checkpointDir: String): Unit = {
     val schema = "doc_id LONG, lang STRING, n_chars LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
       .select("lang", "n_chars")
-    val q = incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        SketchStore.appendQdigest(spark, batch, storeDir, s"batch-$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainEach(incoming, checkpointDir) { (batch, batchId) =>
+      SketchStore.appendQdigest(spark, batch, storeDir, s"batch-$batchId")
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.tools.QualityModelTrainer
 import graft.tools.QualityModelTrainer.QualityModel
@@ -92,23 +91,9 @@ object StreamingQualityGate {
       schema: org.apache.spark.sql.types.StructType = DocSchema): Unit = {
     // Resolve the literal weight map ONCE on the driver, not per batch.
     val resolved = resolve(QualityModelTrainer.load(spark, modelDir))
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dropDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        gate(batch, resolved)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(sinkDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainEach(MicroBatch.fileSource(spark, schema, dropDir),
+        checkpointDir) { (batch, batchId) =>
+      MicroBatch.overwriteBatch(gate(batch, resolved), batchId, sinkDir)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming token-BUDGET admission — the streaming form of the batch
   * `pipe_quota_sample` operator: documents arrive continuously and each
@@ -78,9 +78,7 @@ object StreamingQuota {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val verdicts = featurize(incoming)
       .as[(Long, String, Long, Long)]
       .map { case (id, src, tok, h) => DocIn(id, src, tok, h) }
@@ -90,15 +88,7 @@ object StreamingQuota {
         (src: String, rows: Iterator[DocIn], state: GroupState[Long]) =>
           admitBatch(quotaFor(src))(rows.toSeq, state)
       }
-    val query = verdicts.toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", sinkDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(verdicts, sinkDir, checkpointDir)
   }
 
   /** Budget ledger over the verdict sink: spent vs quota per source. */

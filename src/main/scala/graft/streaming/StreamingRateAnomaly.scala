@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming rate-anomaly detection — the stateful streaming form of the
   * batch `e12_rate_anomaly` operator: events arrive continuously; each
@@ -81,9 +81,7 @@ object StreamingRateAnomaly {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("event_type", s"t_us div $HourUs AS hr")
       .as[(String, Long)]
@@ -97,14 +95,7 @@ object StreamingRateAnomaly {
           state.update(next)
           out.iterator
       }
-    val q = rows.writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows, sinkDir, checkpointDir)
   }
 
   /** Drained rows renamed to the batch operator's schema. */

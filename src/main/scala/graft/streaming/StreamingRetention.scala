@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming weekly-cohort retention — the stateful streaming form of the
   * batch `e11_retention` operator (the [[StreamingFunnel]] sibling the
@@ -65,9 +65,7 @@ object StreamingRetention {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       // The ONE week spelling, shared with the batch operator's axis.
       .selectExpr("user_id", s"t_us div $WeekUs AS wk")
@@ -81,15 +79,7 @@ object StreamingRetention {
           state.update(next)
           out.iterator
       }
-    val q = rows.toDF("user_id", "first_wk", "wk")
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append)
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows.toDF("user_id", "first_wk", "wk"), sinkDir, checkpointDir)
   }
 
   /** The cohort triangle from the append sink — the same cell definition

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.expr.BottomKSample
 import graft.queries.SketchQueries
@@ -76,9 +76,7 @@ object StreamingSampleQuantiles {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     // The batch operator's exact hash/value spellings.
     val hashExpr = graft.queries.DedupQueries.hSpark("cast(doc_id as string)")
     val reports = incoming
@@ -94,15 +92,7 @@ object StreamingSampleQuantiles {
          state: GroupState[SampleState]) =>
           foldBatch(lang, rows.map(r => (r._2, r._3)), state)
       }
-    val query = reports.toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", sinkDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(reports, sinkDir, checkpointDir)
   }
 
   /** The latest report per language from the sink (highest seq), shaped

@@ -72,9 +72,7 @@ object StreamingScd2 {
     import spark.implicits._
     val schema = "user_id LONG, seqval_num LONG, lsn_num LONG, " +
       "operation INT, event_type STRING, value DOUBLE"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val closed = incoming
       .selectExpr("user_id", "seqval_num", "lsn_num", "operation",
         "event_type", "value")
@@ -91,14 +89,7 @@ object StreamingScd2 {
           }
           out.iterator
       }
-    val q = closed.writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(closed, sinkDir, checkpointDir)
   }
 
   /** The drained closed rows, renamed to the batch operator's schema

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sessionization — the stateful streaming form of the batch
   * `e9_sessionize` operator (gap-based session windows, the canonical
@@ -92,9 +92,7 @@ object StreamingSessionize {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("user_id", "t_us", "event_id",
         "event_type = '__flush' AS flush")
@@ -108,16 +106,8 @@ object StreamingSessionize {
           state.update(next)
           out.iterator
       }
-    val q = rows.toDF("user_id", "session_id", "events", "duration_ms",
-      "first_event", "last_event")
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append)
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows.toDF("user_id", "session_id", "events", "duration_ms",
+      "first_event", "last_event"), sinkDir, checkpointDir)
   }
 
   /** The closed sessions from the append sink, batch-shaped (same

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming transition mining — the stateful streaming form of the batch
   * `e13_transitions` operator: events arrive continuously; each user's
@@ -47,9 +47,7 @@ object StreamingTransitions {
       checkpointDir: String): Unit = {
     import spark.implicits._
     val schema = "user_id LONG, event_type STRING, t_us LONG, event_id LONG"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     val rows = incoming
       .selectExpr("user_id", "t_us", "event_id", "event_type")
       .as[(Long, Long, Long, String)]
@@ -62,14 +60,7 @@ object StreamingTransitions {
           state.update(next)
           out.iterator
       }
-    val q = rows.writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    MicroBatch.drainToParquet(rows, sinkDir, checkpointDir)
   }
 
   /** The continuously-maintained matrix from the drained transitions. */

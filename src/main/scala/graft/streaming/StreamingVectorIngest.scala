@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Continuous embedding ingestion into the IVF posting-list store — the
   * streaming half of the similarity-search path: vectors arrive as
@@ -63,9 +62,7 @@ object StreamingVectorIngest {
       outlierThreshold: Double = 0.05): Unit = {
     val cents = unitCentroids(centroids)
     val schema = "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
-    val incoming = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dropDir)
+    val incoming = MicroBatch.fileSource(spark, schema, dropDir)
     graft.expr.GraftFunctions.register(spark)
     val assigned = incoming
       .withColumn("v", transform(col("embedding"), x => x.cast("double")))
@@ -87,14 +84,6 @@ object StreamingVectorIngest {
       .withColumn("p3", expr("cast(element_at(e, 4) + 1 AS INT)"))
       .select("vec_id", "c_id", "embedding", "proto_cos", "is_outlier",
         "p0", "p1", "p2", "p3")
-    val query = assigned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .partitionBy("c_id")
-      .option("path", indexDir)
-      .start()
-    query.awaitTermination()
+    MicroBatch.drainToParquet(assigned, indexDir, checkpointDir, partitionBy = Seq("c_id"))
   }
 }

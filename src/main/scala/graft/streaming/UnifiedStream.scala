@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.Trigger
 
 /** The unified multi-table stream (SURVEY §1.1 "unified topic",
@@ -16,14 +15,8 @@ import org.apache.spark.sql.streaming.Trigger
   * window, exactly as it scopes it (order across windows follows from
   * per-table source order). The strict-order production assert
   * (`main.py:329-331`) becomes [[UnifiedStream.orderValidation]], run on
-  * the engine's own output like the reference's validators.
-  *
-  * Every publisher's `foreachBatch` first re-homes its window on the
-  * caller's session ([[org.apache.spark.sql.graft.Bridge.onSession]]), so
-  * the window's sort and write jobs reuse the executors' class loader and
-  * codegen cache across drains instead of recompiling for each query
-  * start; the query itself, and with it every listener on
-  * `spark.streams`, stays on the caller's session.
+  * the engine's own output like the reference's validators. Every
+  * publisher drains through [[MicroBatch.drainEach]].
   */
 object UnifiedStream {
 
@@ -37,9 +30,7 @@ object UnifiedStream {
   private def unionedFeeds(spark: SparkSession,
       feeds: Map[String, String]): DataFrame =
     feeds.toSeq.sortBy(_._1).map { case (src, dir) =>
-      spark.readStream.schema(graft.sources.CdcTableProvider.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir)
+      MicroBatch.fileSource(spark, graft.sources.CdcTableProvider.schema, dir)
         .filter(col("operation") =!= 3)
         .withColumn("src", lit(src))
     }.reduce(_ unionByName _)
@@ -58,8 +49,8 @@ object UnifiedStream {
     * ranges instead of one run). */
   private def writeOrderedWindow(batch: DataFrame, batchId: Long,
       sinkDir: String): Unit =
-    overwriteWindow(batch.repartition(1).sortWithinPartitions(idxCols: _*),
-      batchId, sinkDir)
+    MicroBatch.overwriteBatch(
+      batch.repartition(1).sortWithinPartitions(idxCols: _*), batchId, sinkDir)
 
   /** One produce window in the scale layout: RANGE-partitioned by the
     * global change index and sorted within partitions — every partition
@@ -70,38 +61,17 @@ object UnifiedStream {
       sinkDir: String, partitions: Int): Unit = {
     val n = if (partitions > 0) partitions
       else batch.sparkSession.sparkContext.defaultParallelism
-    overwriteWindow(batch.repartitionByRange(n, idxCols: _*)
+    MicroBatch.overwriteBatch(batch.repartitionByRange(n, idxCols: _*)
       .sortWithinPartitions(idxCols: _*)
       .withColumn("part", spark_partition_id()), batchId, sinkDir)
   }
 
-  /** Writes a window as the `batch_id` partition of the sink, replacing
-    * only that partition, so a replayed batch rewrites its own output.
-    * The dynamic overwrite mode is a per-write option: set on the
-    * session, it would turn every later partitioned overwrite in that
-    * session dynamic too. */
-  private def overwriteWindow(window: DataFrame, batchId: Long,
-      sinkDir: String): Unit =
-    window.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sinkDir)
-
   /** Run the unified publisher over per-table staged feeds until drained.
     * Each feed is a CdcPipeline-staged directory; `src` labels the table. */
   def run(spark: SparkSession, feeds: Map[String, String], sinkDir: String,
-      checkpointDir: String): Unit = {
-    val unioned = unionedFeeds(spark, feeds)
-
-    val query = unioned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeOrderedWindow(Bridge.onSession(spark, batch), batchId, sinkDir)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    MicroBatch.drainEach(unionedFeeds(spark, feeds), checkpointDir)(
+      writeOrderedWindow(_, _, sinkDir))
 
   /** [[run]] driven by the scheduler-governed DSv2 source instead of the
     * raw feed union (round-6 composition): the unified ordered publisher
@@ -113,20 +83,9 @@ object UnifiedStream {
     * one table's window by the scheduler's construction; the produce
     * sort keeps the intra-window contract identical to [[run]]'s. */
   def runFromSource(spark: SparkSession, baseDir: String, tables: Seq[String],
-      sinkDir: String, checkpointDir: String, batchSize: Int = 2000): Unit = {
-    val unioned = sourceStream(spark, baseDir, tables, batchSize)
-
-    val query = unioned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeOrderedWindow(Bridge.onSession(spark, batch), batchId, sinkDir)
-      }
-      .start()
-    query.processAllAvailable()
-    query.stop()
-  }
+      sinkDir: String, checkpointDir: String, batchSize: Int = 2000): Unit =
+    MicroBatch.drainEach(sourceStream(spark, baseDir, tables, batchSize),
+      checkpointDir, Trigger.ProcessingTime(0))(writeOrderedWindow(_, _, sinkDir))
 
   /** The scheduler-governed DSv2 multi-table stream in unified-publisher
     * shape (PreUpdate images dropped, table label as `src`). */
@@ -145,19 +104,9 @@ object UnifiedStream {
     * needing the total order merge N ordered runs; consumers needing
     * per-key order get it free (a key lives in one range). */
   def runPartitioned(spark: SparkSession, feeds: Map[String, String],
-      sinkDir: String, checkpointDir: String, partitions: Int = 0): Unit = {
-    val unioned = unionedFeeds(spark, feeds)
-
-    val query = unioned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writePartitionedWindow(Bridge.onSession(spark, batch), batchId, sinkDir, partitions)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      sinkDir: String, checkpointDir: String, partitions: Int = 0): Unit =
+    MicroBatch.drainEach(unionedFeeds(spark, feeds), checkpointDir)(
+      writePartitionedWindow(_, _, sinkDir, partitions))
 
   /** The 100× composition end to end (VERDICT r6 #8): the
     * scheduler-governed DSv2 source ([[runFromSource]]'s upstream —
@@ -168,20 +117,10 @@ object UnifiedStream {
     * partition-id order replays the total order. */
   def runPartitionedFromSource(spark: SparkSession, baseDir: String,
       tables: Seq[String], sinkDir: String, checkpointDir: String,
-      batchSize: Int = 2000, partitions: Int = 0): Unit = {
-    val unioned = sourceStream(spark, baseDir, tables, batchSize)
-
-    val query = unioned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writePartitionedWindow(Bridge.onSession(spark, batch), batchId, sinkDir, partitions)
-      }
-      .start()
-    query.processAllAvailable()
-    query.stop()
-  }
+      batchSize: Int = 2000, partitions: Int = 0): Unit =
+    MicroBatch.drainEach(sourceStream(spark, baseDir, tables, batchSize),
+      checkpointDir, Trigger.ProcessingTime(0))(
+      writePartitionedWindow(_, _, sinkDir, partitions))
 
   /** E4-style self-validation over the published unified stream: within
     * every produce window (batch), rows must be non-decreasing in the

@@ -77,18 +77,8 @@ object WindowedRates {
       sinkDir: String, checkpointDir: String,
       eventTimeCol: String = "ts", windowDur: String = "10 seconds",
       watermarkDelay: String = "10 seconds"): Unit = {
-    val in = spark.readStream
-      .schema(spark.read.parquet(feedDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-    val q = windowedCounts(in, eventTimeCol, windowDur, watermarkDelay)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val in = MicroBatch.fileSource(spark, spark.read.parquet(feedDir).schema, feedDir)
+    MicroBatch.drainToParquet(
+      windowedCounts(in, eventTimeCol, windowDur, watermarkDelay), sinkDir, checkpointDir)
   }
 }

@@ -27,9 +27,9 @@ object SketchStore {
 
   /** Fold `docs` (columns: lang, text) into HLL register maxima and
     * append them to the store under `shardId`. Pure DataFrame ops on the
-    * input — no temp view, so it works identically on a batch relation
-    * and on a `foreachBatch` micro-batch (whose isolated session would
-    * not see a view registered on the outer one). */
+    * input — no temp view, so it registers nothing in the session it runs
+    * on and works identically on a batch relation and on a streaming
+    * micro-batch. */
   def appendHll(spark: SparkSession, docs: DataFrame, storeDir: String,
       shardId: String): Unit = {
     import org.apache.spark.sql.functions._

@@ -27,21 +27,8 @@ object Bridge {
   /** `df`'s rows as a DataFrame planned in `spark`: a scan over
     * `df.queryExecution.toRdd`, so every job an action on the result
     * submits runs under `spark`'s artifact state instead of `df`'s.
-    *
-    * Why a streaming micro-batch is re-homed: each query start clones the
-    * caller's session with a fresh artifact UUID, and a `foreachBatch`
-    * batch is planned in that clone. Executors build one isolated session
-    * and class loader per artifact UUID, and Spark's codegen cache is keyed
-    * by (class loader, source), so on the clone every restart of a stream
-    * — every poll cycle of a `Trigger.AvailableNow` publisher — compiles
-    * all of its generated classes again although their source is
-    * unchanged. Re-homed, a batch's jobs (the stateful stage its first
-    * action materializes included) share one class loader and codegen
-    * cache across calls.
-    *
-    * Only the batch is re-homed: the query itself still starts from the
-    * caller's session, so listeners on `spark.streams` keep seeing every
-    * batch's progress, state-operator and observed metrics. */
+    * `graft.streaming.MicroBatch.drainEach` re-homes every streaming
+    * micro-batch this way; its doc says why. */
   def onSession(spark: SparkSession, df: DataFrame): DataFrame =
     ClassicConversions.castToImpl(spark)
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema)

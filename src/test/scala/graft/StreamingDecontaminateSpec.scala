@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -87,5 +88,33 @@ class StreamingDecontaminateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sunk2 = spark.read.parquet(sink).select("doc_id").collect().map(_.getLong(0))
     assert(sunk2.length == sunk2.distinct.length, "restart re-emitted documents")
     assert(sunk2.toSet == all.collect().map(_.getAs[Long]("doc_id")).toSet -- dirtyAll)
+  }
+
+  test("a second wave on the same checkpoint compiles no generated classes") {
+    // Each run call is a query start, the shape of a restarting service.
+    // The second wave's generated code is the first wave's, so it must
+    // all come from the codegen cache.
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val drop = s"$work/warm_drop"; val eval = s"$work/warm_eval"
+    val sink = s"$work/warm_clean"; val ckpt = s"$work/warm_ckpt"
+    docs.filter(col("doc_id") % 11 === 0).write.parquet(eval)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def wave(lo: Int, hi: Int): Long = {
+      docs.filter(col("doc_id") % 11 =!= 0 && col("doc_id") >= lo && col("doc_id") < hi)
+        .coalesce(1).write.parquet(s"$work/warm_$lo")
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$work/warm_$lo"))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .foreach { f =>
+          fs.mkdirs(new org.apache.hadoop.fs.Path(drop))
+          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(drop, s"w$lo.parquet"))
+        }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamingDecontaminate.run(spark, drop, eval, sink, ckpt)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    }
+    wave(0, 200)
+    assert(wave(200, 400) === 0L, "the second wave recompiled generated classes")
+    assert(spark.read.parquet(sink).filter(col("doc_id") >= 200).count() > 0,
+      "the second wave admitted nothing")
   }
 }

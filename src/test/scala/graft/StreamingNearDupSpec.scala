@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -79,5 +80,32 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afterW2.filter(col("doc_id") >= 900000).count() === 0,
       "re-delivered content must be rejected via the RECOVERED claim table")
     assert(afterW2.count() > admitted1, "novel content must still be admitted")
+  }
+
+  test("a second wave on the same checkpoint compiles no generated classes") {
+    // Each run call is a query start, the shape of a restarting service.
+    // The second wave's generated code is the first wave's, so it must
+    // all come from the codegen cache, the stateful claim stage included.
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val drop = s"$work/warm_drop"; val sink = s"$work/warm_admitted"
+    val ckpt = s"$work/warm_ckpt"
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def wave(lo: Int, hi: Int): Long = {
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi).coalesce(1)
+        .write.parquet(s"$work/warm_$lo")
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$work/warm_$lo"))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .foreach { f =>
+          fs.mkdirs(new org.apache.hadoop.fs.Path(drop))
+          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(drop, s"w$lo.parquet"))
+        }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamingNearDup.run(spark, drop, sink, ckpt)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    }
+    wave(0, 150)
+    assert(wave(150, 300) === 0L, "the second wave recompiled generated classes")
+    assert(spark.read.parquet(sink).filter(col("doc_id") >= 150).count() > 0,
+      "the second wave admitted nothing")
   }
 }
