@@ -36,13 +36,7 @@ class KafkaRecordProducerBrokerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kafka-adapter-broker-int")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = graft.GraftSession.local(4)
     work = Files.createTempDirectory("kafka-adapter-int").toString
   }
 

@@ -1,17 +1,11 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     def loadavg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -86,9 +80,15 @@ object Bench {
     val passes = passesRaw.toIntOption.filter(_ >= 1).getOrElse(
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$passesRaw'"))
+    // One stderr line per pass: how many generated classes the pass
+    // compiled, i.e. how much of the codegen working set the cache missed.
     val passResults: Seq[Seq[(String, Double)]] = (1 to passes).map { i =>
       if (i > 1) graft.operators.SessionMemo.reset(spark)
-      sweep()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val pass = sweep()
+      System.err.println(s"[bench] pass $i: " +
+        s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled} generated classes compiled")
+      pass
     }
     val byPass: Seq[Map[String, Double]] = passResults.map(_.toMap)
     val results = passResults.head.map { case (k, _) =>

@@ -85,6 +85,18 @@ object Pin {
     out
   }
 
+  /** Unpersist the blocks behind `pinned`, a Dataset [[pin]] returned,
+    * for a caller that owns the pin and reads it no more. A reliable-mode
+    * pin's checkpoint files stay where they are. */
+  def release(pinned: Dataset[_]): Unit =
+    pinnedRdd(pinned).foreach(_.unpersist(blocking = false))
+
+  /** The checkpointed RDD behind `pinned`: the `LogicalRDD` at its plan root. */
+  private[operators] def pinnedRdd(pinned: Dataset[_]) =
+    pinned.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
   /** `df.pinned()` — the mechanical drop-in for `df.localCheckpoint()`. */
   implicit final class PinSyntax[T](private val ds: Dataset[T]) extends AnyVal {
     def pinned(eager: Boolean = true): Dataset[T] = pin(ds, eager)

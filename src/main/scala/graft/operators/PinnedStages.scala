@@ -42,9 +42,7 @@ object PinnedStages {
       level: Option[org.apache.spark.storage.StorageLevel] = None): Dataset[T] = {
     val sc = ds.sparkSession.sparkContext
     val out = Pin.pin(ds, eager = true, level = level)
-    val pinnedId = out.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
+    val pinnedId = Pin.pinnedRdd(out).map(_.id)
     synchronized {
       pinnedId.filter(sc.getPersistentRDDs.contains).foreach(shared += _)
     }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Pin
 import graft.operators.Pin.PinSyntax
 
 /** Streaming eval-set decontamination: the batch `pipe_decontaminate`
@@ -56,9 +57,9 @@ object StreamingDecontaminate {
     val evalDocs = spark.read.parquet(evalDir)
     val evalSh = shingled(evalDocs)
       .select(col("sh")).distinct().pinned()
-    MicroBatch.drainEach(MicroBatch.fileSource(spark, evalDocs.schema, dropDir),
+    try MicroBatch.drainEach(MicroBatch.fileSource(spark, evalDocs.schema, dropDir),
         checkpointDir) { (batch, batchId) =>
       MicroBatch.overwriteBatch(clean(batch, evalSh), batchId, sinkDir)
-    }
+    } finally Pin.release(evalSh)
   }
 }

@@ -410,7 +410,7 @@ object AnnIndex {
     // loudly — but detect ONCE per store version (file-list hash, the
     // AsOfJoin memo discipline): the detection scan would otherwise tax
     // every serve call on healthy stores just to not print a warning.
-    val fileListKey = allLists.inputFiles.sorted.mkString(" ")
+    val fileListKey = allLists.inputFiles.sorted.mkString("\u0000")
     val hasLegacy = legacyPostings.get(indexDir) match {
       case Some((files, verdict)) if files == fileListKey => verdict
       case _ =>
@@ -447,9 +447,7 @@ object AnnIndex {
   /** CLI: `AnnIndex <sfDir> <indexDir>` — build, then serve a demo probe. */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, indexDir) = args.take(2)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("ann-index").config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     build(spark, sfDir, indexDir)
     val res = topk(spark, indexDir, Seq(0L, 1L, 2L), k = 3, nprobe = 2)
     println(s"[ann-index] served ${res.count()} results from $indexDir")

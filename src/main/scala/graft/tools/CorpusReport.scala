@@ -93,9 +93,7 @@ object CorpusReport {
   /** CLI: `CorpusReport <sfDir>`. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("corpus-report").config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     println(s"[corpus-report] ${report(spark, sfDir)}")
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: print the formatted physical plan of one catalog query and
   * time N evaluations — the `.explain`-and-iterate loop the build rules
   * prescribe, packaged. Usage:
@@ -13,11 +11,7 @@ object PlanProbe {
     val name = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
     val doExplain = args.length <= 3 || args(3) == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     (1 to passes).foreach { p =>
       val t0 = System.nanoTime()

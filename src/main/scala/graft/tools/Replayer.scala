@@ -88,13 +88,7 @@ object Replayer {
     * into the (possibly absent) target parquet table, rewrites it. */
   def main(args: Array[String]): Unit = {
     val Array(logDir, targetDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     val fullLog = spark.read.parquet(logDir)
     val log = (args.lift(2), args.lift(3)) match {

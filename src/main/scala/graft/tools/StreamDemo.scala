@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.CdcPipeline
 
 /** CLI driver for the streaming CDC pipeline: stages the synthetic change
@@ -17,14 +15,7 @@ object StreamDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = args.lift(1).getOrElse(
       Files.createTempDirectory("graft-stream-demo").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     val feed = s"$work/feed"; val sink = s"$work/sink"; val ckpt = s"$work/ckpt"
     CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 5)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** The validation entry point (SURVEY §3.3, `--run-validations`,
   * `validation.py:200-483`): runs the count-reconciliation, ordered
   * differential, ordering-regression, offset-gap, and topic-summary
@@ -13,13 +11,7 @@ object Validate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     var fails = 0
     def check(name: String, failCount: Long, detail: String): Unit = {

@@ -1,28 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Binary quantization (emb_binarize) + Hamming shortlist/cosine rerank
   * (ann_hamming_topk): retrieval quality against the exact cosine
   * baseline, and the invariants the oracle instantiation can't state. */
-class AnnHammingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnHammingSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("ann-hamming")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("emb_binarize: sign words round-trip the density and stay in range") {
     val b = SparkEntry.queries("emb_binarize")(spark, dir).cache()

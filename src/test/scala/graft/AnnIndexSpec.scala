@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.AnnIndex
@@ -11,23 +9,15 @@ import graft.tools.AnnIndex
 /** Persisted IVF index: index-served top-k must be bit-identical to the
   * in-query `ann_ivf_topk` build, and serving must prune to the probed
   * posting-list partitions instead of scanning the corpus. */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("ann-index-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("ann-index").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("index-served results equal the in-query IVF build bit-for-bit") {
     AnnIndex.build(spark, sfDir, s"$work/idx")

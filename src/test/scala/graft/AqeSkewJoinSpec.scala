@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE skew-join handling — the runtime half of this repo's skew story.
@@ -12,28 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * gets its skewed partition split by AQE instead of serializing one
   * straggler task. Guards against config drift (AQE or skew-join
   * accidentally disabled by a future session-builder change). */
-class AqeSkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AqeSkewJoinSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("aqe-skew")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Tiny thresholds so test-sized data counts as skewed.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def sparkConf = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // Tiny thresholds so test-sized data counts as skewed.
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("a hot-key join is split by AQE (skew=true in the final plan)") {
     val ss = spark; import ss.implicits._

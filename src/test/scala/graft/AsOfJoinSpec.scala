@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsOfJoin
@@ -11,20 +9,7 @@ import graft.operators.AsOfJoin
   * key layouts (empty buckets, cross-bucket look-back, boundary keys, key
   * ties between sides, no-match prefixes), plus the plan-shape guarantees
   * that make it scale. */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("asof-join")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AsOfJoinSpec extends AnyFunSuite with LocalSpark {
 
   private def model(lefts: Seq[Long], rights: Seq[(Long, String)]): Map[Long, Option[(Long, String)]] =
     lefts.map { lk =>

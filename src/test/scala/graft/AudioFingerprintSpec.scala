@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.MultimodalQueries
@@ -11,21 +9,9 @@ import graft.queries.MultimodalQueries
   * with exactly its own landmark count (2·n_frames − 3 hashes from the
   * Δ∈{1,2} pairing) — plus determinism. The oracle separately pins the
   * full match table; this spec states the retrieval invariant directly. */
-class AudioFingerprintSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AudioFingerprintSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("audio-fingerprint-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("every probe retrieves itself at rank 1, fully aligned at offset 0") {
     val rows = SparkEntry.queries("mm_audio_fingerprint")(spark, dir)

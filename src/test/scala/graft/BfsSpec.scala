@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -11,21 +9,9 @@ import graft.queries.GraphQueries
 /** Multi-source BFS (graph_bfs): the iterative min-propagation must equal
   * a classic queue-based BFS run driver-side per probe, including the
   * absence of unreachable nodes, plus determinism. */
-class BfsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BfsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bfs-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def adjacency(): Map[Long, Set[Long]] = {
     val orders = spark.read.parquet(s"$dir/orders.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** pipe_bloom_skip's two contract halves: NO FALSE NEGATIVES (every
@@ -10,20 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * payoff (absent probes touch far fewer than all 32 files). The
   * cross-engine oracle separately pins every bit of the filter; this
   * spec pins the PROPERTIES the bits must deliver. */
-class BloomSkipSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BloomSkipSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("bloom-skip")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   test("no false negatives; absent keys skip nearly every file") {
     for (sf <- Seq("sf0.001", "sf0.01")) {

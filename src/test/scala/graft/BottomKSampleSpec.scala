@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bottom-k-by-hash sample aggregate (`expr/BottomKSample`): the
@@ -10,21 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * the hash-collision rule, and — on a skewed distribution the uniform
   * fixture can't produce — that sampled quantiles actually track the
   * exact ones in rank space. */
-class BottomKSampleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class BottomKSampleSpec extends AnyFunSuite with LocalSpark {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bottomk-sample")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.expr.GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("partition layout cannot change the sample (semilattice merge)") {
     val ss = spark; import ss.implicits._

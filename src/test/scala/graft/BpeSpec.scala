@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TokenizerQueries
@@ -12,20 +10,7 @@ import graft.queries.TokenizerQueries
   * the replace-primitive run semantics the single-char token alphabet
   * relies on, learning (the dominant word contracts to ONE token), and
   * determinism across retrains. */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bpe-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BpeSpec extends AnyFunSuite with LocalSpark {
 
   private def docs(texts: Seq[String]): Unit = {
     val ss = spark; import ss.implicits._

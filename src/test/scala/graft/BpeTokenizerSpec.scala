@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.BpeTokenizer
@@ -10,21 +8,9 @@ import graft.tools.BpeTokenizer
   * equals train → encode; token expansion round-trips (concatenating a
   * document's expanded tokens reconstructs its letter stream exactly);
   * the token count agrees with the catalog query's arithmetic. */
-class BpeTokenizerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeTokenizerSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = java.nio.file.Files.createTempDirectory("bpe-model").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bpe-tokenizer")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def fixtureDocs() = {
     val ss = spark; import ss.implicits._

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.SparkPlan
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.BucketedStore
@@ -14,22 +12,16 @@ import graft.tools.BucketedStore
   * write time, then every join/agg on the bucket key plans zero
   * exchanges. Proven from the physical plan against the identical join
   * over plain parquet. */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def sparkConf = Seq(
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("bucketed-wh").toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false")
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    val wh = Files.createTempDirectory("bucketed-wh").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bucketed-join")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     BucketedStore.writeBucketed(
       spark.read.parquet(s"$dir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity"),
@@ -39,8 +31,6 @@ class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         .selectExpr("o_orderkey AS l_orderkey", "o_custkey"),
       "ord_bucketed", "l_orderkey", buckets = 8)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def shuffles(p: SparkPlan): Int =
     p.collect { case s: ShuffleExchangeExec => s }.size

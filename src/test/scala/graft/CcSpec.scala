@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -12,21 +10,9 @@ import graft.queries.GraphQueries
   * the same partition as an INDEPENDENT union-find over the same
   * strong-tie edge set, every label must be its component's minimum
   * member, sizes must add up, and runs must be bit-identical. */
-class CcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CcSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01" // sf0.001's strong graph is one component
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def strongEdgesSql(): Seq[(Long, Long)] = {
     spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("li_cc_spec")

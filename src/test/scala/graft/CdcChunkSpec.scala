@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CorpusRewriteQueries
@@ -11,20 +9,9 @@ import graft.queries.CorpusRewriteQueries
   * keeps (almost) every chunk identity, while the fixed-stride chunker
   * loses essentially all of them — the property that makes shifted
   * re-crawls dedupe at the chunk level. */
-class CdcChunkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcChunkSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("cdc-chunk")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   /** A deterministic 400-word document with enough lexical diversity
     * that boundary hashes behave like the corpus case. */

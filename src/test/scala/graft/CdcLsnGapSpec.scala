@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** G5 exercised IN-STREAM: CDC cleanup outruns the checkpoint (the feed's
@@ -13,22 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * configured strategy does its job on restart — fail loudly, resume
   * from the retention floor, or re-backfill the snapshot first
   * (`tracked_tables.py:137-163`, `options.py:148-154`). */
-class CdcLsnGapSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcLsnGapSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-lsn-gap-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-lsn-gap").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def rows(from: Int, until: Int): DataFrame = spark.sql(
     s"""SELECT cast(id as long) AS lsn_num, 0 AS command_id,

@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.AnsiTranspile.hex20
@@ -16,22 +15,16 @@ import graft.streaming.CdcPipeline
   * (a snapshotting table + a lagging table) loaded into both embedded
   * Derby and the parquet layout must drain through identical batches —
   * the round-6 JDBC mode and the round-6 global scheduler composed. */
-class CdcMultiTableJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcMultiTableJdbcSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val jdbcUrl = "jdbc:derby:memory:graftfleet"
-  private var spark: SparkSession = _
   private var work: String = _
   private var conn: Connection = _
   private val batchSize = 100
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-multi-jdbc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-multi-jdbc").toString
     conn = DriverManager.getConnection(s"$jdbcUrl;create=true")
     val st = conn.createStatement()
@@ -99,7 +92,7 @@ class CdcMultiTableJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (conn != null) conn.close()
     try DriverManager.getConnection(s"$jdbcUrl;drop=true")
     catch { case _: java.sql.SQLException => () }
-    if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   private def runFleet(sink: String, ckpt: String,

@@ -4,10 +4,9 @@ import java.nio.file.Files
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CdcPipeline
@@ -17,20 +16,14 @@ import graft.streaming.CdcPipeline
   * tables, where table B's change backlog arriving MID-SNAPSHOT of table
   * A preempts A's snapshot paging until the backlog drains, then paging
   * resumes (`main.py:209-284`, pauses at `main.py:243-244,263-264`). */
-class CdcMultiTableSchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcMultiTableSchedulerSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
   private val batchSize = 50
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-multi-scheduler-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-multi").toString
 
     // Table A ("orders"): a 1500-row snapshot (30 pages at batchSize 50)
@@ -57,8 +50,6 @@ class CdcMultiTableSchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
     staged.filter(col("seqval_num") < 5)
       .coalesce(1).write.mode("overwrite").parquet(s"$work/events/feed")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("a lagging table's backlog preempts another table's snapshot paging, which then resumes") {
     val sink = s"$work/sink"; val ckpt = s"$work/ckpt"

@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{BrokerSink, CdcPipeline, LogBroker}
@@ -42,25 +41,15 @@ object FailingSink extends CdcPipeline.CdcSink {
   * oracle (last change per key, tombstoned keys dropped). A second run
   * appends late chunks and resumes from the checkpoint — the reference's
   * progress-topic recovery (G2) via Spark checkpoints. */
-class CdcPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcPipelineSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("cdc-pipeline-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-pipeline").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Batch oracle: per key, the highest-index published row; keys whose
     * latest operation is Delete are absent. */

@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.AnsiTranspile.hex20
@@ -16,20 +15,14 @@ import graft.sources.AnsiTranspile.hex20
   * re-snapshot decision in the message — the reference's
   * detect-and-terminate answer (`main.py:358-409`), not a silent
   * mis-projection. */
-class CdcSchemaWatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcSchemaWatchSpec extends AnyFunSuite with LocalSpark {
 
   private val jdbcUrl = "jdbc:derby:memory:graftevo"
-  private var spark: SparkSession = _
   private var work: String = _
   private var conn: Connection = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-schema-watch-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-schema-watch").toString
     conn = DriverManager.getConnection(s"$jdbcUrl;create=true")
     val st = conn.createStatement()
@@ -59,7 +52,7 @@ class CdcSchemaWatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (conn != null) conn.close()
     try DriverManager.getConnection(s"$jdbcUrl;drop=true")
     catch { case _: java.sql.SQLException => () }
-    if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   private def runStream(sink: String, ckpt: String): Unit = {

@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.AnsiTranspile.hex20
@@ -23,11 +22,10 @@ import graft.streaming.CdcPipeline
   * `cdc_kafka/sql_queries.py:218-309,312-367`,
   * `tracked_tables.py:263-352`).
   */
-class CdcSourceJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcSourceJdbcSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val jdbcUrl = "jdbc:derby:memory:graftsrc"
-  private var spark: SparkSession = _
   private var work: String = _
   private var conn: Connection = _
 
@@ -39,12 +37,7 @@ class CdcSourceJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
     (200L, 0, 2000L, 2, 2000L, 42L, null: String, null: java.lang.Double, null: String)
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-source-jdbc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-source-jdbc").toString
 
     // Parquet backend fixture: the staged feed plus the null-bearing row.
@@ -115,7 +108,7 @@ class CdcSourceJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (conn != null) conn.close()
     try DriverManager.getConnection(s"$jdbcUrl;drop=true")
     catch { case _: java.sql.SQLException => () } // drop "fails" with 08006
-    if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   private def runStream(sink: String, ckpt: String,

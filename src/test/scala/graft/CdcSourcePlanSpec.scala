@@ -3,10 +3,9 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CdcPipeline
@@ -17,24 +16,16 @@ import graft.streaming.CdcPipeline
   * one-row aggregation job per probe), and replay of a committed batch is
   * a pure function of the offset pair — restarting with a different
   * batchSize must reproduce the identical batch. */
-class CdcSourcePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcSourcePlanSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-source-plan-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-source-plan").toString
     CdcPipeline.stageChangeFeed(spark, sfDir, s"$work/feed", nChunks = 2)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def runToSink(sink: String, ckpt: String, batchSize: Int): Unit = {
     val q = spark.readStream.format("graft.sources.CdcTableProvider")

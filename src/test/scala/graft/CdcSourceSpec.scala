@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CdcPipeline
@@ -13,24 +12,16 @@ import graft.streaming.CdcPipeline
 /** The custom DSv2 CDC MicroBatchStream: ordered batch-size-paced windows,
   * exactly-once delivery, CdcOffset JSON in the offset log, and restart
   * resume from the checkpoint. */
-class CdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcSourceSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cdc-source-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("cdc-source").toString
     CdcPipeline.stageChangeFeed(spark, sfDir, s"$work/feed", nChunks = 2)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def stream(): DataFrame =
     spark.readStream.format("graft.sources.CdcTableProvider")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -17,21 +15,9 @@ import graft.queries.GraphQueries
   * (a replicated to each later block), and the (least, greatest)
   * orientation with the p ≠ p filter reproduces the plain join's
   * one-row-per-qualifying-pair exactly. */
-class CoPurchaseSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CoPurchaseSkewSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("copurchase-skew-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Build the memoized relation fresh under the given block bound. */
   private def build(d: String, block: Option[Int]): Seq[(Long, Long, Long)] = {

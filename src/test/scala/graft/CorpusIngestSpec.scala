@@ -2,33 +2,23 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CorpusIngest
 
 /** Streaming corpus ingestion: state-store dedup must hold WITHIN a run
   * (across micro-batches) and ACROSS restarts (checkpoint recovery). */
-class CorpusIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CorpusIngestSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def sparkConf = Seq("spark.sql.streaming.schemaInference" -> "false")
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("corpus-ingest")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.streaming.schemaInference", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("corpus-ingest").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("stream dedups across micro-batches and restarts; gate precedes state") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,28 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.CorpusReport
 
 /** The corpus report must be well-formed JSON whose figures agree with
   * the operators it composes. */
-class CorpusReportSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CorpusReportSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("corpus-report-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("report agrees with the underlying oracle-checked operators") {
     val json = CorpusReport.report(spark, sfDir)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{DedupQueries, SimilarityQueries}
@@ -10,21 +8,9 @@ import graft.queries.{DedupQueries, SimilarityQueries}
 /** The scale-path variants must be RESULT-identical to their baseline
   * formulations — salting and star contraction reshape the shuffle, not
   * the answer — and their plans must show the reshaping actually happened. */
-class DedupVariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupVariantsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("dedup-variants")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("salted LSH band join yields exactly the unsalted pair set") {
     val plain = DedupQueries.ddMinhashLsh(spark, dir)

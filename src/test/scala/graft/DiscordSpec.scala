@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TimeSeriesQueries
@@ -10,23 +8,12 @@ import graft.queries.TimeSeriesQueries
   * reference implementation on crafted and seeded-random series — the
   * oracle compare proves the engines agree; this proves they compute
   * the RIGHT discord (exclusion zone included). */
-class DiscordSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DiscordSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def cpus = 2
   private val N = 30
   private val M = TimeSeriesQueries.MpLen
   private val Excl = TimeSeriesQueries.MpExcl
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("discord-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Reference matrix profile + discord (max nn-dist, lowest window). */
   private def refDiscord(series: Array[Long]): (Int, Long) = {

@@ -1,28 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSIR importance weights (pipe_dsir_weights): the hashed log-ratio
   * weights must actually recover the target domain — the target language
   * gets the strictly highest mean per-token weight — and the floor-log2
   * scores must match an independent driver-side computation. */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DsirSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("dsir-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("target language wins the mean per-token weight, others score below") {
     val rows = SparkEntry.queries("pipe_dsir_weights")(spark, dir).collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TimeSeriesQueries
@@ -14,20 +12,9 @@ import graft.queries.TimeSeriesQueries
   * only shorten the optimal warp). The cross-engine integer equality is
   * separately enforced by the ts_dtw_topk oracle compare (a structurally
   * different anti-diagonal recursion in DuckDB). */
-class DtwSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DtwSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("dtw-kernel")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   /** Independent reference: textbook O(n²) banded DTW over Longs. */
   private def refDtw(q: Array[Long], c: Array[Long], band: Int): Long = {

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `spark.sql.extensions=graft.GraftExtensions` must make every custom
   * function available to pure-SQL sessions. */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("extensions-spec")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
+  override protected def sparkConf = Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   test("all custom functions resolve from SQL") {
     val r = spark.sql(

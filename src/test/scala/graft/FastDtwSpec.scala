@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ts_fastdtw (r13): the oracle gate proves both engines run the same
@@ -13,20 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * accuracy knob: r = 1 overshoots on these sparse hourly series
   * (FastDTW's documented hard case), and r = 6 recovers the exact
   * optimum while still cutting cells several-fold. */
-class FastDtwSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("fastdtw-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FastDtwSpec extends AnyFunSuite with LocalSpark {
 
   private def series(dir: String): (Array[Long], Array[Long]) = {
     import graft.queries.TimeSeriesQueries.StompN

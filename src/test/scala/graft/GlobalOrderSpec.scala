@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GlobalOrder
@@ -13,20 +11,7 @@ import graft.operators.GlobalOrder
   * 100 TB-sort configuration, where localCheckpoint's executor-storage
   * materialization is the wrong trade) must produce ranks identical to
   * the default local path. */
-class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("global-order")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GlobalOrderSpec extends AnyFunSuite with LocalSpark {
 
   test("reliable checkpoint() path ranks identically to the localCheckpoint default") {
     val ckpt = Files.createTempDirectory("global-order-ckpt").toString

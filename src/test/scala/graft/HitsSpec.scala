@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -10,21 +8,9 @@ import graft.queries.GraphQueries
   * independent driver-side replay of the same floor-arithmetic updates
   * (propagate + L1-normalize), the output must be the two top-10s with
   * deterministic tie-breaks, and runs must be bit-identical. */
-class HitsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HitsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("hits-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def edges(): Seq[(Long, Long)] = {
     spark.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("o_hits")

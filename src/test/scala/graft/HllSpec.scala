@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.SketchQueries
@@ -11,21 +10,10 @@ import graft.queries.SketchQueries
   * must land within the published error envelope (σ = 1.04/√64 ≈ 13%),
   * and duplicate-heavy streams must not move it (register maxes absorb
   * repetition — the sketch counts distinct, not volume). */
-class HllSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HllSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def cpus = 8
   private val dir = java.nio.file.Files.createTempDirectory("hll-spec").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[8]")
-      .appName("hll-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Fixture: `n` distinct words per language, 40 words per doc, with
     * `copies` full repetitions of the corpus. */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HNSW serving (ann_hnsw_topk): returned similarities must equal the
@@ -9,21 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ranks must be a clean per-probe 1..3 consistent with those sims, the
   * hierarchy must never do worse than the flat NSW search on the same
   * graph (the multi-seed guarantee), and runs must be bit-identical. */
-class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HnswSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("hnsw-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def vectors(): Map[Long, Array[Float]] =
     spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.IncrementalDedup
@@ -15,21 +14,12 @@ import graft.tools.IncrementalDedup
   * BY an increment stops generating pairs, exactly as the batch operator
   * would drop it.
   */
-class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class IncrementalDedupSpec extends AnyFunSuite with LocalSpark {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("incremental-dedup")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.expr.GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** ≥128-char docs so every doc carries several 64-char windows; shared
     * passages are long verbatim runs (the operator's target). */

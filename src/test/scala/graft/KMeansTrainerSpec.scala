@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.KMeansTrainer
@@ -9,20 +7,7 @@ import graft.tools.KMeansTrainer
 /** Spherical k-means trainer: on directionally-separated synthetic blobs
   * it must recover the true directions and assign with full purity, and
   * it must be deterministic run to run. */
-class KMeansTrainerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kmeans-trainer")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class KMeansTrainerSpec extends AnyFunSuite with LocalSpark {
 
   /** 3 blobs of 60 vectors in 8 dims, each hugging one axis direction
     * with small seeded noise — cosine-separable by construction. */

@@ -2,29 +2,15 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** k-core decomposition (graph_kcore): the h-index fixpoint must equal
   * the coreness computed by an INDEPENDENT algorithm — classic minimum-
   * degree peeling run driver-side on the same bipartite graph — plus
   * structural invariants and bit-exact determinism. */
-class KcoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KcoreSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kcore-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** The same customer↔supplier bipartite edge set the query builds,
     * collected driver-side (160 nodes at sf0.001 — test-only scale). */

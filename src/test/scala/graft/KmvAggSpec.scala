@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** KmvBottomK custom aggregate: exact bottom-k semantics, dedup of
   * repeated values, and partial-merge invariance (the semilattice law the
   * shuffle relies on). */
-class KmvAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class KmvAggSpec extends AnyFunSuite with LocalSpark {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kmv-agg")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.expr.GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("keeps the k smallest distinct values, ascending") {
     val ss = spark; import ss.implicits._

@@ -1,31 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** KMV set-operation sketch (sk_kmv_intersect): estimator accuracy
   * against the exact witnesses it carries, and the degenerate-pair
   * behavior (zero intersection ⇒ exactly-zero estimate). */
-class KmvIntersectSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KmvIntersectSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   // sf0.01: shingle sets are 3k-11k per language, so k_used saturates at
   // K=256 and the ESTIMATOR path (not the exact-small-set path) is
   // exercised.
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kmv-intersect")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("union estimate lands within 25% of exact when the sketch saturates") {
     val out = SparkEntry.queries("sk_kmv_intersect")(spark, dir).cache()

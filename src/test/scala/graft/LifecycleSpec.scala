@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CdcQueries
@@ -11,20 +9,9 @@ import graft.queries.CdcQueries
   * the growth-accounting identities are only reachable here (the
   * PrefixJaccardSpec discipline: oracle equality proves the engines
   * agree, the spec proves the operator does the RIGHT thing). */
-class LifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LifecycleSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("lifecycle-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   /** Run the production body over an explicit (user, week) activity set. */
   private def ledger(active: Seq[(Long, Long)]): Map[(Long, String), Long] = {

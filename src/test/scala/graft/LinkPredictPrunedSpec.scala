@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graph_link_predict_pruned (r13): the PPJoin+ cascade over adjacency
@@ -13,20 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the threshold actually discriminates (crafted graph with one pair
   *    on each side of t).
   */
-class LinkPredictPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("link-predict-pruned")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LinkPredictPrunedSpec extends AnyFunSuite with LocalSpark {
 
   test("top-50 equals the exact operator where the fixture floor clears t = 1/3") {
     val dir = "/root/testdata/sf0.001"

@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -13,21 +11,9 @@ import graft.queries.GraphQueries
   * indices over the same co-purchase graph (independent algorithm: full
   * neighbor-set intersection per non-adjacent pair), plus determinism
   * and the non-adjacency invariant. */
-class LinkPredictSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LinkPredictSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("linkpredict-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def coPurchaseAdj(): mutable.Map[Long, mutable.Set[Long]] = {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")

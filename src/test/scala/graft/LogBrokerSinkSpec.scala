@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{BrokerSink, CdcPipeline, LogBroker}
@@ -49,25 +48,15 @@ final class BatchIdRecorder(inner: CdcPipeline.CdcSink) extends CdcPipeline.CdcS
   * (invisible) records, the restart replays the batch under a new
   * producer epoch, and the final `read_committed` + compacted views are
   * exactly the parquet-sink oracle — exactly-once observed end to end. */
-class LogBrokerSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LogBrokerSinkSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("logbroker-sink-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("logbroker-sink").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // ---- broker-model unit tests -------------------------------------
 

@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -13,21 +11,9 @@ import graft.queries.GraphQueries
   * one component, since labels only travel along edges; (b) match an
   * independent driver-side replay of the same plurality update rule;
   * (c) be bit-identical across runs. */
-class LpaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LpaSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("lpa-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def strongEdges(): Seq[(Long, Long)] = {
     spark.read.parquet(s"$dir/lineitem.parquet")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.{CdcMetricsListener, CollectingReporter, HttpPostReporter, IntervalMetrics, KafkaReporter, LocalFileReporter, MetricsProducer}
@@ -12,22 +10,15 @@ import graft.streaming.CdcPipeline
 /** The metrics surface (A12/D7): a streaming run must produce one
   * interval record per micro-batch with consistent counts, fanned out to
   * every configured reporter. */
-class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MetricsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def cpus = 2
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("metrics-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("metrics-spec").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("listener emits one interval record per micro-batch to all reporters") {
     val collector = new CollectingReporter

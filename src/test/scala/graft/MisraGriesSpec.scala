@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MisraGriesCandidates: the n/K recall guarantee on a skewed stream
@@ -14,21 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * exchange). This is the spec that pins the GUARANTEE; the DuckDB
   * oracle pins only final-output parity.
   */
-class MisraGriesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class MisraGriesSpec extends AnyFunSuite with LocalSpark {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("mg-agg")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.expr.GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Zipf-ish stream: ~40k-item tail vocabulary (far above K) plus a few
     * planted heavy items. Deterministic seed. */

@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.MultimodalQueries
@@ -13,9 +12,8 @@ import graft.queries.MultimodalQueries
   * threshold — the part that makes this NEAR-dup rather than exact dup —
   * needs its own fixture: one quarter changed pairs, two quarters
   * changed does not. */
-class MmNearDupBandsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MmNearDupBandsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var dir: String = _
 
   // 40 chars, qlen 10: quarters are [1-10][11-20][21-30][31-40].
@@ -24,12 +22,7 @@ class MmNearDupBandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val twoQuartersOff = "aaaaaaaaaaYYYYYYYYYYccccccccccddddddddXX"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("mm-near-dup-bands")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     dir = Files.createTempDirectory("mm-bands").toString
     val ss = spark; import ss.implicits._
     // Ids avoid doc_id % 5 == 0 so the dedup corpus CTE injects no copies.
@@ -41,8 +34,6 @@ class MmNearDupBandsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("one changed quarter pairs at 3 bands; two changed quarters do not pair") {
     val got = MultimodalQueries.mmNearDupBands(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** dd_ngram_jaccard's salted block join under adversarial skew: ONE
@@ -11,18 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * finding). The max-pairs-per-shuffle-key is the max-task bound for
   * the join: salting with R salts must cut it ~R× while producing
   * exactly the same pair set. */
-class NgramJaccardSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NgramJaccardSkewSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val salts = 4
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("ngram-skew-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     // 400 docs, 390 of them in one source with one size bucket: the
     // dominant block a boilerplate-heavy crawl produces.
     spark.sql(
@@ -32,8 +24,6 @@ class NgramJaccardSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM range(400)""".stripMargin)
       .createOrReplaceTempView("skew_ids")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def pairs(sql: String) = spark.sql(sql)
 

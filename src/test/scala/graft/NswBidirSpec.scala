@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ann_nsw_bidir (r13): the reverse-edge re-selection
@@ -9,23 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * this spec pins the INDEX-side structural claims the output can't
   * show: the bidirectional degree bound, candidate provenance, and
   * that reverse nominations actually enter final adjacency lists. */
-class NswBidirSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NswBidirSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("nsw-bidir")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     // Force the serve (builds nbd_edges_t / nbd2_edges_t views).
     graft.queries.SimilarityQueries.annNswBidir(spark, dir).count()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def edgeSet(view: String): Set[(Long, Long)] =
     spark.table(view).select("vec_id", "nbr_id")

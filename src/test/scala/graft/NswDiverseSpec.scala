@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Diversity-selected NSW (ann_nsw_diverse): returned sims must be the
@@ -9,21 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the heuristic exists for — a synthetic near-duplicate clump must
   * occupy at most ONE edge slot of a node adjacent to it, where plain
   * top-M selection would spend every slot on the clump. */
-class NswDiverseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NswDiverseSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("nsw-diverse-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def vectors(): Map[Long, Array[Float]] =
     spark.read.parquet(s"$dir/embeddings.parquet")

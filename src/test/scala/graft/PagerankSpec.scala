@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.GraphQueries
@@ -11,21 +9,9 @@ import graft.queries.GraphQueries
   * losses, structural sanity on the bipartite graph, and bit-exact
   * determinism across runs (the property the iterative integer design
   * exists to provide). */
-class PagerankSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PagerankSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pagerank-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("rank mass conserves to SCALE up to integer floor losses") {
     val out = SparkEntry.queries("graph_pagerank")(spark, dir).cache()

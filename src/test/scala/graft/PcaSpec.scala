@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.PcaQueries
@@ -10,21 +8,9 @@ import graft.queries.PcaQueries
   * power iteration must actually RECOVER the dominant variance direction
   * (planted-direction fixture), deterministically, with the documented
   * sign convention. */
-class PcaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PcaSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val D = PcaQueries.Dim
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pca-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Deterministic LCG in [-1, 1). */
   private def lcg(seed: Long): Double = {

@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Pin
@@ -18,22 +17,9 @@ import graft.operators.Pin
   * (graph_pagerank), the memoized dedup cascade (dd_prefix_jaccard), the
   * multi-stage ANN index build (ann_ivf_topk), and the BPE trainer's
   * lazy pin (text_bpe_train exercises `pinned(eager = false)`). */
-class PinModeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PinModeSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pin-mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted

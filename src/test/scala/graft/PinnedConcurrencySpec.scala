@@ -5,9 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Thread safety of the partition-preserving pin (r16, VERDICT r15 #7):
@@ -18,20 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (2) concurrent builds from several threads all succeed, and (3) the
   * returned relation still advertises its hash partitioning (a keyed
   * aggregation over it plans with zero Exchange). */
-class PinnedConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pinned-concurrency-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PinnedConcurrencySpec extends AnyFunSuite with LocalSpark {
 
   test("caller-session AQE stays on during concurrent partitioned pins; layout survives") {
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -1,27 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus-assembly operators (PipelineQueries): result invariants the
   * oracle can't see (conservation laws between the outputs) plus the
   * plan shapes that make them 100 TB-safe. */
-class PipelineQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineQueriesSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pipeline-queries")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, dir)
   private def plan(name: String): String =

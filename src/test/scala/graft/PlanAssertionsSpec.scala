@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests (SURVEY §4): the optimizations that
@@ -9,21 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast joins on dimension sides, filter pushdown reaching the
   * parquet scan, TakeOrderedAndProject for top-k, no single-reducer
   * global windows. */
-class PlanAssertionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanAssertionsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("plan-assertions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Whole-catalog physical-plan audit: every `SparkEntry.queries` entry is
@@ -21,23 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * sees the static planner output rather than a half-finalized adaptive
   * wrapper.
   */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanAuditSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def sparkConf = Seq("spark.sql.adaptive.enabled" -> "false")
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("plan-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** All plan nodes including subquery plans. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product-quantization quality: the binary oracle proves the
@@ -10,21 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the approximation: candidates the ADC search returns must be
   * genuinely near their query in TRUE squared-L2, and exact duplicate
   * vectors must encode to identical codes. */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PqSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("pq-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("ADC top-5 candidates sit in the near tail of the TRUE L2 distribution") {
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PPJoin candidate-filter predicates — the positional (first shared
@@ -15,20 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and never fires when the overlap can still reach it. Over-pruning is
   * separately excluded by the oracle equality of dd_prefix_jaccard
   * against the naive all-pairs definition at both SFs. */
-class PrefixJaccardSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PrefixJaccardSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("prefix-jaccard")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   /** Run the exact cand-CTE shape over a hand-built prefix relation. */
   private def surviving(rows: Seq[(Long, String, Long, Long)]): Set[(Long, Long)] = {

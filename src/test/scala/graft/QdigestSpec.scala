@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.SketchQueries.{QdB, QdK, QdMax}
@@ -14,21 +12,9 @@ import graft.queries.SketchQueries.{QdB, QdK, QdMax}
   * half-corpus sketches (node-count union + one recompression) must
   * keep quantile queries inside the merged bound — the property that
   * makes the sketch a partial aggregate. */
-class QdigestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QdigestSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("qdigest-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def values(): Map[String, Seq[Long]] = {
     spark.read.parquet(s"$dir/documents.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.QualityModelTrainer
@@ -13,20 +11,7 @@ import graft.tools.QualityModelTrainer
   * `text_quality_model` proves both engines compute the same model from
   * the same data; this spec proves the model is worth computing.
   */
-class QualityModelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("quality-model")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class QualityModelSpec extends AnyFunSuite with LocalSpark {
 
   // Deterministic labeled fixture: "good" docs draw from a prose
   // vocabulary, "bad" docs from a spam vocabulary, with a shared

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** emb_rp_project: the oracle proves engine parity of the projected
@@ -10,21 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * variance ‖x‖²), so ‖Px‖²/k estimates ‖x‖² within JL sampling error;
   * pairwise squared distances are preserved the same way (P is linear).
   */
-class RandomProjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RandomProjectionSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("random-projection")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def loadVectors(): Map[Long, Array[Long]] =
     spark.read.parquet(s"$sfDir/embeddings.parquet")

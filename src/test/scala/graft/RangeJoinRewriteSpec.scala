@@ -1,27 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The injected RangeJoinRewrite optimizer rule: a naive theta range join
   * written by a user who has never heard of RangeJoin must come out as a
   * bucketed equi-join (no nested loop) with identical results. */
-class RangeJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RangeJoinRewriteSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("range-join-rewrite")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
+  override protected def sparkConf = Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   private def fixtures(): (Seq[(Long, Long)], Seq[(Long, Long, Long)]) = {
     val rnd = new scala.util.Random(3)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
@@ -10,20 +8,7 @@ import graft.operators.RangeJoin
   * (point, interval) pairs under overlapping intervals, empty intervals,
   * bucket-boundary keys, and varying bucket widths; plus the equi-join
   * plan guarantee. */
-class RangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("range-join")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RangeJoinSpec extends AnyFunSuite with LocalSpark {
 
   test("matches the brute-force model on overlapping layouts") {
     val rnd = new scala.util.Random(7)

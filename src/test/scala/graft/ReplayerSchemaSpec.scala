@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SchemaInference
@@ -11,20 +9,9 @@ import graft.tools.Replayer
 
 /** Replayer MERGE semantics (A11) and catalog-driven schema inference
   * (A4) over in-memory fixtures. */
-class ReplayerSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ReplayerSchemaSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("replayer-schema-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   test("replayer applies deletes, updates, inserts with last-wins batches") {
     val ss = spark

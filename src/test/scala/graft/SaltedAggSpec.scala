@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The skew-salting pattern (SURVEY §4 / README scale notes): a heavily
@@ -10,20 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * would own a whole key's rows) is salted into N sub-keys, partially
   * aggregated, then re-aggregated — two balanced shuffles instead of one
   * skewed one, with results identical to the direct aggregation. */
-class SaltedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("salted-agg-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SaltedAggSpec extends AnyFunSuite with LocalSpark {
 
   test("salted two-phase aggregation equals the direct aggregation") {
     val ev = graft.fixtures.SyntheticCdc.events(spark, "/root/testdata/sf0.001")

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** sf≈1 scale-stress for the dedup/ANN family (round-2 verdict #9: the
@@ -26,22 +25,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *   GRAFT_STRESS=1 sbt "testOnly graft.ScaleStressSpec"
   * Timings from the last recorded run live in README.md §Performance.
   */
-class ScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleStressSpec extends AnyFunSuite with LocalSpark {
 
   private val Copies = 10
   private val IdStride = 10_000_000L
-  private var spark: SparkSession = _
+  override protected def cpus = 16
+  override protected def sparkConf = Seq("spark.sql.shuffle.partitions" -> "32")
   private var dir: String = _
   private def stressEnabled = sys.env.get("GRAFT_STRESS").contains("1")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[16]")
-      .appName("scale-stress")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     if (stressEnabled) {
       dir = Files.createTempDirectory("graft-sf1").toString
       // events replicate on BOTH ids: user_id (each copy is a fresh user
@@ -69,8 +63,6 @@ class ScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -15,24 +14,15 @@ import graft.tools.Scd2Maintain
   * seq-monotone split equals the one-shot build, and the streaming form
   * (through a checkpoint restart) emits exactly the batch operator's
   * closed versions while its state holds exactly the open ones. */
-class Scd2MaintainSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Scd2MaintainSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("scd2-maintain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("scd2-maintain").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def changes: DataFrame =
     SyntheticCdc.changeRows(spark, dir)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CdcQueries
@@ -14,22 +12,9 @@ import graft.queries.CdcQueries
   * in at most one version. These are the invariants the DuckDB oracle
   * cannot state (it only hash-compares one instantiation).
   */
-class Scd2Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Scd2Spec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("scd2-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("versions partition each key's seq axis: no overlap, chain links exactly") {
     val v = CdcQueries.c12Scd2(spark, dir).cache()

@@ -5,8 +5,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{PinnedStages, SessionMemo}
@@ -18,21 +16,9 @@ import graft.operators.{PinnedStages, SessionMemo}
   * set sketches, BPE merges → encode, PCA covariance → component chain)
   * must return the first pass's rows. Two consumers of one relation
   * started together on an empty memo build it once. */
-class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SessionMemoSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("session-memo-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** One query's rows, order-free. */
   private def rows(q: String): Seq[String] =

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.SketchStore
@@ -13,24 +11,15 @@ import graft.tools.SketchStore
   * estimate a from-scratch corpus pass computes (register max is a
   * semilattice), and re-appending a shard cannot move it (idempotence).
   */
-class SketchStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchStoreSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("sketch-store")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("sketch-store").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def servedRows(store: String) =
     SketchStore.serveDistinct(spark, store).collect()

@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CdcPipeline
@@ -14,19 +13,13 @@ import graft.tools.{OffsetInspect, ProgressReset, SnapshotHistory, TruncationOpp
 /** The operator-facing snapshot tools: history reconstruction from the
   * offset log, and truncation opportunities over the published batch-id
   * partitions after a completed re-snapshot. */
-class SnapshotToolsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SnapshotToolsSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("snapshot-tools-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("snapshot-tools").toString
     CdcPipeline.stageChangeFeed(spark, sfDir, s"$work/feed", nChunks = 2)
     // Snapshot base table for the backfill dimension.
@@ -38,8 +31,6 @@ class SnapshotToolsSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("o_orderpriority").as("props"))
       .coalesce(2).write.mode("overwrite").parquet(s"$work/snapshot")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def runStream(sink: String, ckpt: String): Unit = {
     val q = spark.readStream.format("graft.sources.CdcTableProvider")

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CorpusRewriteQueries
@@ -11,23 +10,11 @@ import graft.queries.CorpusRewriteQueries
   * duplicates): global first-occurrence keeps, later occurrences excised,
   * rebuilt text equals the hand-built expectation, and the all-duplicate
   * document collapses to the empty rewrite. */
-class SpanRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SpanRewriteSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = java.nio.file.Files.createTempDirectory("span-rw").toString
 
   private val B = CorpusRewriteQueries.SpanBlock
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("span-rewrite")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def block(tag: String): String =
     (0 until B).map(i => s"$tag$i").mkString(" ")

@@ -4,9 +4,7 @@ import java.sql.{Connection, DriverManager}
 
 import scala.math.Ordering.Implicits._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.TrackedFieldMeta
@@ -28,24 +26,16 @@ import graft.sources.SqlServerDialect
   * lexicographic order is exactly the binary order (the same property the
   * reference relies on for its hex-rendered LSNs).
   */
-class SqlServerDialectExecSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlServerDialectExecSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var conn: Connection = _
 
   private val valueFields = Seq("user_id", "event_type", "value", "props")
   private val nFixture = 2000
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("dialect-exec-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     conn = DriverManager.getConnection("jdbc:derby:memory:graftdb;create=true")
     loadFixture()
   }
@@ -54,7 +44,7 @@ class SqlServerDialectExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (conn != null) conn.close()
     try DriverManager.getConnection("jdbc:derby:memory:graftdb;drop=true")
     catch { case _: java.sql.SQLException => () } // drop "fails" with 08006
-    if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   // ---- T-SQL -> Derby mechanical transpile: shared with the source's

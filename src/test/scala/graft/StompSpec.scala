@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TimeSeriesQueries
@@ -16,22 +14,9 @@ import graft.queries.TimeSeriesQueries
   * matrix, not just at the emitted discords. The DuckDB oracle
   * separately replays the identical recurrence text (engine parity);
   * this spec is the proof the recurrence equals the definition. */
-class StompSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StompSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("stomp-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** The naive matrix profile over the identical hourly series: for
     * every window pair (i, i+k), k in [excl, n−m], the squared distance

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CorpusRewriteQueries
@@ -15,22 +14,9 @@ import graft.streaming.CorpusIngest
   * must equal batch `pipe_chunk` over the admitted corpus — through a
   * restart — and a rejected or duplicate document must produce no chunks
   * at all (admission gates the chunker by construction). */
-class StreamingChunkerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingChunkerSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-chunker")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("two-wave stream with restart chunks exactly the admitted corpus, batch-equal") {
     val base = Files.createTempDirectory("schunk").toString

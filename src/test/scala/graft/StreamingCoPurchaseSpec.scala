@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingCoPurchase
@@ -15,22 +14,9 @@ import graft.streaming.StreamingCoPurchase.{BasketState, PairRow}
   * incremental new-item × seen-items emission is what makes each
   * unordered pair of an order emit exactly once with no completion
   * signal. */
-class StreamingCoPurchaseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingCoPurchaseSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-copurchase")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("unit fold: pairs emit once, duplicates are no-ops, state accrues") {
     val (s1, o1) = StreamingCoPurchase.advance(5L, Seq(10L, 20L, 10L), None)

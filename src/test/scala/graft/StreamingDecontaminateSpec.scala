@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingDecontaminate
@@ -13,23 +11,15 @@ import graft.streaming.StreamingDecontaminate
 /** Streaming decontamination: contaminated documents never reach the
   * sink, clean ones always do, and the gate agrees with the batch
   * operator's semantics across micro-batches and restarts. */
-class StreamingDecontaminateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingDecontaminateSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-decontaminate")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("stream-decon").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("contaminated docs are blocked across batches and restarts") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -116,5 +106,22 @@ class StreamingDecontaminateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wave(200, 400) === 0L, "the second wave recompiled generated classes")
     assert(spark.read.parquet(sink).filter(col("doc_id") >= 200).count() > 0,
       "the second wave admitted nothing")
+  }
+
+  test("every run releases the eval-set pin it took") {
+    // A restarting service calls run again and again on one session; each
+    // call pins the eval shingle set, so each call must also release it.
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val drop = s"$work/pin_drop"; val eval = s"$work/pin_eval"
+    val sink = s"$work/pin_clean"; val ckpt = s"$work/pin_ckpt"
+    docs.filter(col("doc_id") % 11 === 0).write.parquet(eval)
+    docs.filter(col("doc_id") % 11 =!= 0 && col("doc_id") < 100).write.parquet(drop)
+    graft.operators.PinnedStages.sweepTransient(spark)
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { call =>
+      StreamingDecontaminate.run(spark, drop, eval, sink, ckpt)
+      assert(spark.sparkContext.getPersistentRDDs.size === baseline,
+        s"run call $call left a pinned RDD behind")
+    }
   }
 }

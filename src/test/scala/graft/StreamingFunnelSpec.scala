@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -15,22 +14,9 @@ import graft.streaming.StreamingFunnel.{EventIn, FunnelState}
   * when events arrive in event-time order (the repo's ordered-delivery
   * guarantee), including across a mid-stream restart; the forward-only
   * fold semantics are pinned directly on the unit fold. */
-class StreamingFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingFunnelSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-funnel")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("unit fold: strict forward-only stage anchoring") {
     def e(t: Long, ty: String, id: Long = 0) = EventIn(1L, ty, t, id)

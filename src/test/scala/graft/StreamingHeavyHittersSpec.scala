@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.TestGroupState
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingHeavyHitters
@@ -15,23 +13,15 @@ import graft.streaming.StreamingHeavyHitters.{HhReport, MgState}
   * (final streamed report ⊇ the batch operator's exact heavy-hitter
   * set) must hold across micro-batches AND a restart, with per-language
   * state bounded at K counters regardless of stream length. */
-class StreamingHeavyHittersSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingHeavyHittersSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-hh")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("streaming-hh").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def flattenDrop(drop: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)

@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -16,22 +15,9 @@ import graft.streaming.StreamingLifecycle.{LcRow, LcState, WkIn}
   * horizon flush, through a mid-stream restart — including the crafted
   * gap histories the fixture never produces (its users are continuously
   * active, so churn/resurrection only exist here and in LifecycleSpec). */
-class StreamingLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingLifecycleSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val Wk = StreamingLifecycle.WeekUs
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-lifecycle")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("unit fold: every transition, churn-once, flush idempotence") {
     def wk(w: Long) = WkIn(1L, w, flush = false)

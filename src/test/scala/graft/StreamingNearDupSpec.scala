@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingNearDup
@@ -13,23 +11,15 @@ import graft.streaming.StreamingNearDup
 /** Streaming MinHash/LSH near-dup rejection: exact re-deliveries collide
   * on every band and must be rejected, within a run and across restarts;
   * admitted documents are signature-unique. */
-class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingNearDupSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-near-dup")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("near-dup").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("near-dups are rejected across batches and restarts") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingPassageDedup
@@ -13,23 +12,15 @@ import graft.streaming.StreamingPassageDedup
   * stream (below the boilerplate cap the two operators agree EXACTLY),
   * cross-restart pairing through the checkpointed anchor state, and the
   * cap's freeze semantics at the unit level. */
-class StreamingPassageDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingPassageDedupSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-passage-dedup")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("streaming-passage").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Lift each wave's part-files out of its write directory so the file
     * stream sees them (same helper as StreamingQuotaSpec). */

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingQdigestIngest
@@ -15,24 +13,15 @@ import graft.tools.SketchStore
   * (leaf counts are a commutative monoid — merge-then-compress is the
   * from-scratch sketch, not an approximation of it), through a restart
   * and through a deliberately replayed batch. */
-class StreamingQdigestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingQdigestSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-qdigest")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("stream-qdigest").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def served(store: String): Map[(String, Int), (Long, Long, Long, Long)] =
     SketchStore.serveQuantiles(spark, store).collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingQualityGate
@@ -13,21 +11,12 @@ import graft.tools.QualityModelTrainer
   * batch prediction exactly through a mid-stream restart, and a replay
   * with no new data must change nothing.
   */
-class StreamingQualityGateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class StreamingQualityGateSpec extends AnyFunSuite with LocalSpark {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-quality-gate")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     graft.expr.GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val proseVocab = Vector("analysis", "method", "result", "clear",
     "evidence", "study", "detail", "figure", "measure", "report")

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingQuota
@@ -13,23 +11,15 @@ import graft.streaming.StreamingQuota
   * (across micro-batches) and ACROSS restarts (spent budget recovered
   * from the checkpoint), with the batch operator's boundary rule — a
   * document is admitted iff its tokens START within budget. */
-class StreamingQuotaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingQuotaSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-quota")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("streaming-quota").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def flattenDrop(drop: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)

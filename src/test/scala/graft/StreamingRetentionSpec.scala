@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -16,22 +15,9 @@ import graft.streaming.StreamingRetention.{RetState, WeekRow}
   * (the repo's ordered-delivery guarantee), including across a mid-stream
   * restart; the once-per-(user, week) emission and forward-only anchor
   * are pinned directly on the unit fold. */
-class StreamingRetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingRetentionSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-retention")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("unit fold: cohort anchors once, weeks emit exactly once") {
     // Fresh user: anchor = earliest incoming week, every week emits.

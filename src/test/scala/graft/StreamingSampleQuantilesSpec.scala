@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingSampleQuantiles
@@ -13,21 +12,9 @@ import graft.streaming.StreamingSampleQuantiles
   * equal the batch `sk_sample_quantiles` output EXACTLY (bit-for-bit,
   * not within-ε) — through a mid-stream restart and regardless of how
   * the corpus was split into waves. */
-class StreamingSampleQuantilesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSampleQuantilesSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-sample-quantiles")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("drained two-wave stream with restart equals the batch sample exactly") {
     val base = Files.createTempDirectory("ssq").toString

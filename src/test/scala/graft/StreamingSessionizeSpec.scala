@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -16,23 +15,10 @@ import graft.streaming.StreamingSessionize.{EvIn, Open, SessRow, SessState}
   * including sessions that span a mid-stream restart; gap closure,
   * ordinal continuity across flush-closed sessions, and the no-op flush
   * are pinned directly on the unit fold. */
-class StreamingSessionizeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSessionizeSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private val Gap = StreamingSessionize.GapUs
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-sessionize")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("unit fold: gap closure, spanning continuation, ordinal continuity, flush semantics") {
     def ev(t: Long, id: Long) = EvIn(7L, t, id, flush = false)

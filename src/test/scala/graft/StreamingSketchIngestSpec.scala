@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingSketchIngest
@@ -13,24 +11,15 @@ import graft.tools.SketchStore
 /** Streaming sketch ingestion: the served estimate equals the batch
   * `sk_hll_distinct` pass through a restart, and a deliberately
   * REPLAYED batch cannot move it (the semilattice exactly-once). */
-class StreamingSketchIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSketchIngestSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-sketch")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("stream-sketch").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def served(store: String) =
     SketchStore.serveDistinct(spark, store).collect()

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.SyntheticCdc
@@ -13,24 +11,15 @@ import graft.streaming.StreamingTransitions
 /** Streaming transition matrix: drained counts equal the batch
   * `e13_transitions` matrix through a checkpoint restart; the fold's
   * anchor behavior directly. */
-class StreamingTransitionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingTransitionsSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-transitions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("stream-trans").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("two waves with a restart reproduce the batch matrix exactly") {
     val drop = s"$work/drop"; val sink = s"$work/sink"; val ckpt = s"$work/ckpt"

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.KMeansTrainer
@@ -14,22 +12,14 @@ import graft.streaming.StreamingVectorIngest
   * same posting lists the batch assignment computes, in the
   * centroid-partitioned layout the persisted index serves from, without
   * duplicates across waves. */
-class StreamingVectorIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingVectorIngestSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-vector-ingest")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("vec-ingest").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def blobs(ids: Range) = {
     val ss = spark; import ss.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Detection semantics for `text_encoding_quality` on damage the clean
@@ -9,20 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * — legitimate text carries them), U+FFFD replacement scars, and the
   * clean-ratio / verdict arithmetic, pinned per class of damage.
   */
-class TextEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextEncodingSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("text-encoding")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   test("control chars, replacement scars, and exemptions score correctly") {
     val ss = spark; import ss.implicits._

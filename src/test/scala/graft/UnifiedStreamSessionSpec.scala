@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.UnifiedStream
@@ -13,23 +11,15 @@ import graft.streaming.UnifiedStream
   * `batch_id` partition, and they do it without touching the caller's
   * session: a session-wide dynamic overwrite mode would silently turn
   * every later partitioned overwrite in that session dynamic. */
-class UnifiedStreamSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class UnifiedStreamSessionSpec extends AnyFunSuite with LocalSpark {
 
   private val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("unified-stream-session-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("unified-session").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def published(sink: String): Seq[String] =
     spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq

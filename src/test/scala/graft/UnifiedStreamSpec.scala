@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{CdcPipeline, UnifiedStream}
@@ -14,23 +12,15 @@ import graft.streaming.{CdcPipeline, UnifiedStream}
   * stream, each produce window in global change-index order, validated by
   * the engine's own order check (the reference's strict-order assert and
   * validator, run against our output). */
-class UnifiedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class UnifiedStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("unified-stream-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("unified-spec").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Stages the multi-table source's layout under `base`: `events` as one
     * change window, `orders` as a 1,500-row snapshot plus a 9-row change

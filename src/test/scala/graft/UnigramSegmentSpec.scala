@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TokenizerQueries.{UniMaxGram, UniMaxLen, UniProbes, UniTokCost}
@@ -11,21 +9,9 @@ import graft.queries.TokenizerQueries.{UniMaxGram, UniMaxLen, UniProbes, UniTokC
   * vocabulary, every word must be segmentable (single chars are always
   * in-vocab), and the packed (cost, n_tokens) min must be the true
   * lexicographic optimum. */
-class UnigramSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
+class UnigramSegmentSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("unigram-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def bitlen(x: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(x)
 

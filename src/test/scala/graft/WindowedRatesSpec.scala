@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.WindowedRates
@@ -13,22 +11,14 @@ import graft.streaming.WindowedRates
 /** Watermarked windowed rates: windows publish exactly once when the
   * watermark closes them, and rows later than the watermark are dropped
   * instead of revising published windows. */
-class WindowedRatesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class WindowedRatesSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("windowed-rates")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("windowed-rates").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ts(sec: Int) = new Timestamp(sec * 1000L)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** pipe_zorder's Morton interleave and its locality claim. The bit
@@ -10,20 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * insertion-order layout on the zone-map witness — summed per-bucket
   * extent areas — by a wide margin, while both layouts partition the
   * identical row multiset. */
-class ZorderSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZorderSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("zorder-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus = 2
 
   /** Reference interleave: bit i of x at position 2i, of y at 2i+1. */
   private def refMorton(x: Int, y: Int): Long = {

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.ZorderStore
@@ -15,25 +14,17 @@ import graft.tools.ZorderStore
   * ONE partition directory of the dozens written, returns exactly the
   * full-scan answer, and the driver-side Morton bucketing agrees with
   * the SQL writer's (the persisted normalizer keeps them in step). */
-class ZorderStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZorderStoreSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
   private var store: String = _
   private var buckets: Long = 0L
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("zorder-store")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     store = Files.createTempDirectory("zstore").toString
     buckets = ZorderStore.write(spark, sfDir, store)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Files the scan ACTUALLY selected after partition pruning (the
     * FileSourceScanExec metric — `df.inputFiles` reports the relation's

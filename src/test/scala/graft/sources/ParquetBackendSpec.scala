@@ -2,12 +2,12 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.LocalSpark
 import graft.model.{ChangeIndex, Policies}
 
 /** The parquet backend's boundary probes come from a driver-side key
@@ -16,22 +16,15 @@ import graft.model.{ChangeIndex, Policies}
   * probes used to run — kept here, and only here, as the oracle — while
   * the feed changes under the index: files land, are rewritten in place,
   * and are deleted by retention. */
-class ParquetBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ParquetBackendSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
+  override protected def cpus = 2
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("parquet-backend-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     work = Files.createTempDirectory("parquet-backend").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // ---- the oracle: the Spark-aggregation probes, as they were --------
 
