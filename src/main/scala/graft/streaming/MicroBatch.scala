@@ -25,8 +25,25 @@ import org.apache.spark.sql.types.StructType
   * session's conf. Only the batch is re-homed: the query itself still
   * starts from the caller's session, so listeners on `spark.streams` keep
   * seeing every batch's progress, state-operator and observed metrics.
+  *
+  * Why every start installs [[LocalCheckpointFileManager]]: a batch acks
+  * only once its offsets, commit log and state deltas are on disk, and
+  * Spark's default checkpoint manager forks `chmod` and `readlink` for
+  * those files on a host without `libhadoop` (110 processes per keyed
+  * batch). The manager is set on the stream's session only when
+  * `spark.sql.streaming.checkpointFileManagerClass` is unset there (and
+  * in its SparkContext's Hadoop conf): a class the user chose wins.
   */
 object MicroBatch {
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Sets [[LocalCheckpointFileManager]] as `spark`'s checkpoint file
+    * manager unless a manager class is already set. */
+  private def useLocalCheckpoints(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+      spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
 
   /** The parquet files landing in `dir`, one file per micro-batch (the
     * reference's `db_row_batch_size` pacing, E6/E7). The schema is
@@ -43,6 +60,7 @@ object MicroBatch {
     * the exactly-once story: a replayed batch's files are never listed. */
   def drainToParquet(stream: Dataset[_], sinkDir: String,
       checkpointDir: String, partitionBy: Seq[String] = Nil): Unit = {
+    useLocalCheckpoints(stream.sparkSession)
     val writer = stream.writeStream
       .format("parquet")
       .option("path", sinkDir)
@@ -63,6 +81,7 @@ object MicroBatch {
       trigger: Trigger = Trigger.AvailableNow())(
       body: (DataFrame, Long) => Unit): Unit = {
     val spark = stream.sparkSession
+    useLocalCheckpoints(spark)
     val query = stream.toDF().writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")

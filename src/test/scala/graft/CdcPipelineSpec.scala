@@ -3,12 +3,13 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{BrokerSink, CdcPipeline, LogBroker}
+import graft.streaming.{BrokerSink, CdcPipeline, LocalCheckpointFileManager, LogBroker}
 
 /** Static in-JVM broker stub for the Kafka-shaped sink test: producers
   * created on (local-mode) executors record into one shared queue. */
@@ -64,6 +65,10 @@ class CdcPipelineSpec extends AnyFunSuite with LocalSpark {
       .filter(col("rn") === 1 && col("operation") =!= 1)
       .select(col("user_id"), col("seqval_num"), col("event_type"), col("value"))
   }
+
+  /** A published value's change index; tombstones carry none. */
+  private val changeIndex =
+    """"lsnNum":-?\d+,"commandId":-?\d+,"seqvalNum":-?\d+,"operation":-?\d+""".r
 
   test("streamed compacted state equals the batch last-wins oracle") {
     val feed = s"$work/feed1"; val sink = s"$work/sink1"; val ckpt = s"$work/ckpt1"
@@ -233,6 +238,66 @@ class CdcPipelineSpec extends AnyFunSuite with LocalSpark {
     (2 until 5).foreach { w =>
       assert(cycle(w) === 0L, s"window $w recompiled generated classes")
     }
+    LogBroker.drop(broker)
+  }
+
+  test("warm poll cycles fork no process to commit their checkpoint") {
+    // Every batch writes its offsets, commit-log entry and one state delta
+    // per state partition before it acks; none of them may go through a
+    // forked chmod or readlink.
+    val feed = s"$work/feed_fork"; val ckpt = s"$work/ckpt_fork"
+    val broker = "fork-broker"; val topic = "t-fork"
+    val sink = BrokerSink.transactional(broker, topic)
+    def cycle(window: Int): Unit = {
+      CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 5,
+        Some(window until window + 1))
+      CdcPipeline.run(spark, feed, ckpt, sink)
+    }
+    (0 until 2).foreach(cycle)
+    val forks = CheckpointForks.during((2 until 5).foreach(cycle))
+    assert(forks === 0, s"3 warm cycles forked $forks processes from a checkpoint file manager")
+    assert(LogBroker.get(broker).uncommittedCount(topic) === 0)
+    LogBroker.drop(broker)
+  }
+
+  test("a checkpoint carries on across Spark's default checkpoint manager and graft's") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val sparkDefault = spark.newSession()
+    sparkDefault.conf.set(key, classOf[FileContextBasedCheckpointFileManager].getName)
+    val feed = s"$work/feed_mgr"; val ckpt = s"$work/ckpt_mgr"
+    val broker = "mgr-broker"; val topic = "t-mgr"
+    val sink = BrokerSink.transactional(broker, topic)
+    def cycle(session: SparkSession, windows: Range): Unit = {
+      CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 5, Some(windows))
+      CdcPipeline.run(session, feed, ckpt, sink)
+    }
+    cycle(sparkDefault, 0 until 2)
+    cycle(spark, 2 until 4)
+    // Back to Spark's default, this time set in the SparkContext's Hadoop
+    // conf, which wins over graft's just as a session's setting does.
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val sparkViaHadoop = spark.newSession()
+    hadoopConf.set(key, classOf[FileContextBasedCheckpointFileManager].getName)
+    try cycle(sparkViaHadoop, 4 until 5) finally hadoopConf.unset(key)
+    assert(sparkViaHadoop.conf.getOption(key).isEmpty)
+    assert(sparkDefault.conf.get(key) === classOf[FileContextBasedCheckpointFileManager].getName)
+    assert(spark.conf.get(key) === classOf[LocalCheckpointFileManager].getName)
+
+    val b = LogBroker.get(broker)
+    assert(b.uncommittedCount(topic) === 0)
+    val indexed = b.readCommittedAll(topic).collect { case (_, r) if r.value != null =>
+      val v = new String(r.value, "UTF-8")
+      (new String(r.key, "UTF-8"), changeIndex.findFirstIn(v).getOrElse(v))
+    }
+    assert(indexed.distinct.size === indexed.size, "a (key, change index) was published twice")
+
+    CdcPipeline.runToParquet(spark, feed, s"$work/sink_mgrP", s"$work/ckpt_mgrP")
+    val cols = Seq("userId", "lsnNum", "commandId", "seqvalNum", "operation",
+      "eventType", "value").map(col)
+    val got = BrokerSink.compactedState(spark, broker, topic).select(cols: _*)
+    val exp = CdcPipeline.compactedState(spark, s"$work/sink_mgrP").select(cols: _*)
+    assert(got.count() === exp.count())
+    assert(got.except(exp).isEmpty && exp.except(got).isEmpty)
     LogBroker.drop(broker)
   }
 

@@ -154,4 +154,15 @@ class UnifiedStreamSpec extends AnyFunSuite with LocalSpark {
     assert(spark.read.parquet(s"$work/unified_w2").count() ===
       spark.read.parquet(s"$work/unified_w1").count())
   }
+
+  test("a warm source-driven drain forks no process to commit its checkpoint") {
+    val base = s"$work/srcbaseF"
+    stageSourceBase(base)
+    def drain(n: Int): Unit =
+      UnifiedStream.runFromSource(spark, base, Seq("orders", "events"),
+        s"$work/unified_f$n", s"$work/ckpt_f$n", batchSize = 400)
+    drain(1)
+    val forks = CheckpointForks.during(drain(2))
+    assert(forks === 0, s"a warm drain forked $forks processes from a checkpoint file manager")
+  }
 }
