@@ -1,14 +1,9 @@
 package graft.streaming
 
 import java.net.URI
-import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** The checkpoint file manager graft's streams commit through: offsets,
@@ -19,13 +14,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * micro-batch, paid before the batch is acked.
   *
   * On `file:` paths this is Spark's `FileSystemBasedCheckpointFileManager`
-  * over one checksummed local filesystem per JVM that sets permissions
-  * through `java.nio`, so a checkpoint write forks nothing and keeps the
-  * default manager's contract: the temp file is renamed into place on
-  * close, `cancel` leaves nothing behind, a no-overwrite rename onto an
-  * existing file throws `FileAlreadyExistsException`, `.crc` sidecars are
-  * written and checked on read, and files and directories get the same
-  * permission bits. Every other scheme goes unchanged to Spark's
+  * over one [[NioLocalFileSystem]] per JVM, the checksummed local
+  * filesystem that sets permissions through `java.nio` (the class
+  * [[MicroBatch.overwriteBatch]] also writes its windows through). So a
+  * checkpoint write forks nothing and keeps the default manager's
+  * contract: the temp file is renamed into place on close, `cancel`
+  * leaves nothing behind, a no-overwrite rename onto an existing file
+  * throws `FileAlreadyExistsException`, `.crc` sidecars are written and
+  * checked on read, and files and directories get the same permission
+  * bits. Every other scheme goes unchanged to Spark's
   * `FileContextBasedCheckpointFileManager`.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
@@ -58,24 +55,11 @@ object LocalCheckpointFileManager {
     Option(path.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
-  /** Hadoop's raw local filesystem with `setPermission` through `java.nio`
-    * instead of a forked `chmod`. File creation and `mkdirs` both set
-    * permissions through it. */
-  private final class NioRawLocalFileSystem extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val bits = permission.toShort
-      // PosixFilePermission's declaration order is owner rwx, group rwx,
-      // others rwx: ordinal i is mode bit 8 - i.
-      val perms = PosixFilePermission.values.filter(x => (bits & (1 << (8 - x.ordinal))) != 0)
-      Files.setPosixFilePermissions(pathToFile(p).toPath, perms.toSet.asJava)
-    }
-  }
-
-  /** One checksummed filesystem for every manager in the JVM, configured
+  /** One [[NioLocalFileSystem]] for every manager in the JVM, configured
     * from Hadoop's defaults and site files. */
   private lazy val sharedFs: FileSystem = {
     val conf = new Configuration()
-    val fs = new LocalFileSystem(new NioRawLocalFileSystem)
+    val fs = new NioLocalFileSystem
     fs.setConf(conf)
     fs.initialize(URI.create("file:///"), conf)
     fs

@@ -33,17 +33,45 @@ import org.apache.spark.sql.types.StructType
   * batch). The manager is set on the stream's session only when
   * `spark.sql.streaming.checkpointFileManagerClass` is unset there (and
   * in its SparkContext's Hadoop conf): a class the user chose wins.
+  *
+  * Why [[overwriteBatch]] writes through [[NioLocalFileSystem]]: it is
+  * the produce step of every parquet window a [[drainEach]] body
+  * publishes, on the batch's blocking path, and Hadoop's local
+  * filesystem forks a `chmod` for each file, `.crc` sidecar and
+  * directory the parquet write makes (22 for a window of four part
+  * files). Two writer options, `fs.file.impl` and
+  * `fs.file.impl.disable.cache` (Hadoop caches filesystems by scheme, not
+  * by class), route the `file:` paths of that one write, its tasks
+  * included, through the fork-free class; the session's other reads and
+  * writes, and every other scheme, are untouched. The same set-if-unset
+  * rule holds: the options are added only when `fs.file.impl` is unset
+  * in the session conf and in the SparkContext's Hadoop conf.
+  * [[drainToParquet]] cannot do the same: Spark's file stream sink
+  * builds its Hadoop conf without the writer options.
   */
 object MicroBatch {
 
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val LocalFsKey = "fs.file.impl"
+
+  /** Whether `key` is set neither in `spark`'s conf nor in its
+    * SparkContext's Hadoop conf. */
+  private def unset(spark: SparkSession, key: String): Boolean =
+    spark.conf.getOption(key).isEmpty && spark.sparkContext.hadoopConfiguration.get(key) == null
 
   /** Sets [[LocalCheckpointFileManager]] as `spark`'s checkpoint file
     * manager unless a manager class is already set. */
   private def useLocalCheckpoints(spark: SparkSession): Unit =
-    if (spark.conf.getOption(CheckpointManagerKey).isEmpty &&
-        spark.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+    if (unset(spark, CheckpointManagerKey))
       spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+
+  /** Writer options that put a write's `file:` paths on
+    * [[NioLocalFileSystem]], or none when a local filesystem class is
+    * already set. */
+  private def localFsOptions(spark: SparkSession): Map[String, String] =
+    if (unset(spark, LocalFsKey))
+      Map(LocalFsKey -> classOf[NioLocalFileSystem].getName, s"$LocalFsKey.disable.cache" -> "true")
+    else Map.empty
 
   /** The parquet files landing in `dir`, one file per micro-batch (the
     * reference's `db_row_batch_size` pacing, E6/E7). The schema is
@@ -101,9 +129,11 @@ object MicroBatch {
     * `dir`, replacing only that partition, so a replayed batch rewrites
     * its own output and nothing else. The dynamic overwrite mode is a
     * per-write option: set on the session, it would turn every later
-    * partitioned overwrite in that session dynamic too. */
+    * partitioned overwrite in that session dynamic too. So are the
+    * options that write it through [[NioLocalFileSystem]]. */
   def overwriteBatch(df: DataFrame, batchId: Long, dir: String): Unit =
     df.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .options(localFsOptions(df.sparkSession))
       .partitionBy("batch_id").parquet(dir)
 }

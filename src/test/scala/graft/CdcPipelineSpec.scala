@@ -254,10 +254,26 @@ class CdcPipelineSpec extends AnyFunSuite with LocalSpark {
       CdcPipeline.run(spark, feed, ckpt, sink)
     }
     (0 until 2).foreach(cycle)
-    val forks = CheckpointForks.during((2 until 5).foreach(cycle))
+    val forks = Forks.during(Forks.CheckpointManager)((2 until 5).foreach(cycle))
     assert(forks === 0, s"3 warm cycles forked $forks processes from a checkpoint file manager")
     assert(LogBroker.get(broker).uncommittedCount(topic) === 0)
     LogBroker.drop(broker)
+  }
+
+  test("warm poll cycles fork no process to write their parquet windows") {
+    // Each cycle publishes one window through ParquetPartitionedSink's
+    // per-batch overwrite; only the run is counted, not the staging.
+    val feed = s"$work/feed_wfork"; val ckpt = s"$work/ckpt_wfork"
+    val sink = s"$work/sink_wfork"
+    def cycle(window: Int): Int = {
+      CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 5,
+        Some(window until window + 1))
+      Forks.during(Forks.HadoopShell)(CdcPipeline.runToParquet(spark, feed, sink, ckpt))
+    }
+    (0 until 2).foreach(cycle)
+    val forks = (2 until 5).map(cycle).sum
+    assert(forks === 0, s"3 warm cycles forked $forks processes from Hadoop's shell")
+    assert(spark.read.parquet(s"$sink/log").select("batch_id").distinct().count() >= 5)
   }
 
   test("a checkpoint carries on across Spark's default checkpoint manager and graft's") {

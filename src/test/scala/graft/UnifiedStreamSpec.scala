@@ -162,7 +162,20 @@ class UnifiedStreamSpec extends AnyFunSuite with LocalSpark {
       UnifiedStream.runFromSource(spark, base, Seq("orders", "events"),
         s"$work/unified_f$n", s"$work/ckpt_f$n", batchSize = 400)
     drain(1)
-    val forks = CheckpointForks.during(drain(2))
+    val forks = Forks.during(Forks.CheckpointManager)(drain(2))
     assert(forks === 0, s"a warm drain forked $forks processes from a checkpoint file manager")
+  }
+
+  test("a warm source-driven drain forks no process to write its windows") {
+    val base = s"$work/srcbaseWF"
+    stageSourceBase(base)
+    def drain(n: Int): Unit =
+      UnifiedStream.runFromSource(spark, base, Seq("orders", "events"),
+        s"$work/unified_wf$n", s"$work/ckpt_wf$n", batchSize = 400)
+    drain(1)
+    val forks = Forks.during(Forks.HadoopShell)(drain(2))
+    assert(forks === 0, s"a warm drain forked $forks processes from Hadoop's shell")
+    assert(spark.read.parquet(s"$work/unified_wf2").count() ===
+      spark.read.parquet(s"$work/unified_wf1").count())
   }
 }
