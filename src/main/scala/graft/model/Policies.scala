@@ -22,9 +22,18 @@ object Policies {
   case object IgnoreGap extends LsnGapAction
   case object ResnapshotOnGap extends LsnGapAction
 
+  /** The gap predicate, `stored < predecessor(minAvailable)`: true exactly
+    * when an index exists strictly between the stored cursor and the
+    * retention floor, i.e. a cleaned row could have been missed. (The
+    * coarser `stored < min` is wrong twice over: it false-positives when
+    * the floor is the immediate successor, and it makes resnapshot
+    * re-fire after its own backfill, which resumes at
+    * `predecessor(min)`.) A floor at the Lowest sentinel has nothing
+    * below it. Returns the strategy to apply on a gap. */
   def onLsnGap(minAvailable: ChangeIndex, stored: ChangeIndex,
       strategy: LsnGapAction): Option[LsnGapAction] =
-    if (stored >= minAvailable) None // no gap
+    if (minAvailable == ChangeIndex.Lowest ||
+        stored >= ChangeIndex.predecessor(minAvailable)) None // no gap
     else Some(strategy)
 
   /** E7: poll pacing bounds in seconds (`constants.py:6-7`). */

@@ -14,13 +14,16 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.{ChangeIndex, TrackedFieldMeta}
+import graft.model.{ChangeIndex, Policies, TrackedFieldMeta}
 
 /** The custom CDC `MicroBatchStream` source (SURVEY §7.4): a DataSource V2
   * streaming source whose offset is the engine's own [[CdcOffset]] (change
   * index per table) and whose pacing is the reference's
   * `db_row_batch_size` — each micro-batch advances at most `batchSize`
-  * rows in strict change-index order.
+  * rows in strict change-index order. This provider tracks ONE table; it
+  * builds the same [[CdcStream]] as [[CdcMultiTableProvider]] with a
+  * fleet of one, as the reference's poll loop runs one table as N = 1
+  * (`main.py:209-284`), and its rows carry no `table_name` tag.
   *
   * Scale shape: a trigger's boundary probe returns only the batch's end
   * key, never the window itself, and each InputPartition carries only
@@ -72,8 +75,20 @@ class CdcTableProvider extends TableProvider {
     CdcTableProvider.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CdcTable(properties.asScala.toMap)
+      properties: util.Map[String, String]): Table = {
+    val props = properties.asScala.toMap
+    new CdcTable(props.getOrElse("tablename", "cdc_feed"), CdcTableProvider.schema,
+        props, tagged = false)({ o =>
+      val table = o.get("tableName").getOrElse("cdc_feed")
+      val backend = o.jdbcUrl match {
+        case Some(url) =>
+          o.jdbcBackend(url, o.get("captureInstance").getOrElse(table), "snapshotTable")
+        case None =>
+          new ParquetBackend(o.required("feedDir"), o.get("snapshotDir"), o.batchSize)
+      }
+      Seq(table -> backend)
+    })
+  }
 }
 
 object CdcTableProvider {
@@ -99,51 +114,62 @@ object CdcTableProvider {
     Seq("user_id", "event_id", "event_type", "value", "props")
 }
 
-private class CdcTable(options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = options.getOrElse("tablename", "cdc_feed")
-  override def schema(): StructType = CdcTableProvider.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    // Read options surface here (case-insensitive), not in the table
-    // properties map.
-    val merged = options.map { case (k, v) => k.toLowerCase -> v } ++
-      opts.asCaseSensitiveMap().asScala.map { case (k, v) => k.toLowerCase -> v }
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = CdcTableProvider.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-          val batchSize = merged.getOrElse("batchsize", "2000").toInt
-          val backend = merged.get("jdbcurl") match {
-            case Some(url) =>
-              new JdbcBackend(url,
-                merged.getOrElse("captureinstance",
-                  merged.getOrElse("tablename", "cdc_feed")),
-                merged.get("snapshottable").map { st =>
-                  st.split('.') match {
-                    case Array(s, t) => (s, t)
-                    case _ => ("dbo", st)
-                  }
-                },
-                batchSize,
-                merged.getOrElse("terminateoncaptureinstancechange", "false").toBoolean)
-            case None =>
-              new ParquetBackend(
-                merged.getOrElse("feeddir", sys.error("feedDir option required")),
-                merged.get("snapshotdir"),
-                batchSize)
-          }
-          new CdcMicroBatchStream(
-            merged.getOrElse("tablename", "cdc_feed"), batchSize, backend,
-            LsnGap.parse(merged.getOrElse("lsngapstrategy", "fail")),
-            StartPoint.parse(merged.getOrElse("startpoint", "earliest")))
-        }
+/** The options both providers share, parsed once: table properties
+  * overlaid by read options (which surface at scan time, not in the
+  * properties map), all keys lower-cased. Each provider reads its own
+  * options through [[get]]/[[required]] and builds its fleet. */
+private final class CdcOptions(properties: Map[String, String],
+    read: CaseInsensitiveStringMap) {
+  private val merged = properties.map { case (k, v) => k.toLowerCase -> v } ++
+    read.asCaseSensitiveMap().asScala.map { case (k, v) => k.toLowerCase -> v }
+
+  def get(key: String): Option[String] = merged.get(key.toLowerCase)
+  def required(key: String): String =
+    get(key).getOrElse(sys.error(s"$key option required"))
+
+  def batchSize: Int = get("batchSize").getOrElse("2000").toInt
+  def jdbcUrl: Option[String] = get("jdbcUrl")
+  def gapStrategy: Policies.LsnGapAction =
+    LsnGap.parse(get("lsnGapStrategy").getOrElse("fail"))
+  def startPoint: String = StartPoint.parse(get("startPoint").getOrElse("earliest"))
+
+  /** A live change table (capture instance) with the optional snapshot
+    * table named by option `snapshotKey` (`schema.table`; a bare name is
+    * in `dbo`). */
+  def jdbcBackend(url: String, captureInstance: String,
+      snapshotKey: String): FeedBackend = {
+    val snapshotTable = get(snapshotKey).map { st =>
+      st.split('.') match {
+        case Array(s, t) => (s, t)
+        case _ => ("dbo", st)
       }
     }
+    new JdbcBackend(url, captureInstance, snapshotTable, batchSize,
+      get("terminateOnCaptureInstanceChange").getOrElse("false").toBoolean)
   }
 }
 
-/** Offset = the serialized CdcOffset for this one table. */
+/** The one table class behind both providers: `fleet` turns the parsed
+  * options into the tracked (table, backend) pairs; `tagged` prepends
+  * the `table_name` discriminator to every row (the multi-table schema). */
+private class CdcTable(tableName: String, tableSchema: StructType,
+    properties: Map[String, String], tagged: Boolean)(
+    fleet: CdcOptions => Seq[(String, FeedBackend)]) extends Table with SupportsRead {
+  override def name(): String = tableName
+  override def schema(): StructType = tableSchema
+  override def capabilities(): util.Set[TableCapability] =
+    Set(TableCapability.MICRO_BATCH_READ).asJava
+  override def newScanBuilder(read: CaseInsensitiveStringMap): ScanBuilder =
+    () => new Scan {
+      override def readSchema(): StructType = tableSchema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+        val o = new CdcOptions(properties, read)
+        new CdcStream(fleet(o), o.batchSize, o.gapStrategy, o.startPoint, tagged)
+      }
+    }
+}
+
+/** Offset = the serialized CdcOffset of every tracked table. */
 private case class CdcStreamOffset(offset: CdcOffset) extends Offset {
   override def json(): String = offset.json
 }
@@ -155,16 +181,17 @@ final class CdcLsnGapException(msg: String) extends RuntimeException(msg)
 /** G5 in-stream: CDC cleanup can outrun stored progress — the DB's
   * minimum retained change index moves past the checkpoint and rows in
   * between are gone (`tracked_tables.py:137-163`, `options.py:148-154`).
-  * Checked before every change-window advance. Deliberately CONSERVATIVE,
-  * like the reference's min-LSN comparison: a cleanup that deleted
-  * exactly through the consumed position is indistinguishable from one
-  * that deleted past it (the evidence is the deleted rows), so it flags. */
+  * Checked before a table's first change-window advance. Deliberately
+  * CONSERVATIVE, like the reference's min-LSN comparison: a cleanup that
+  * deleted exactly through the consumed position is indistinguishable
+  * from one that deleted past it (the evidence is the deleted rows), so
+  * it flags. */
 private object LsnGap {
 
-  def parse(s: String): graft.model.Policies.LsnGapAction = s.toLowerCase match {
-    case "fail" => graft.model.Policies.FailOnGap
-    case "ignore" => graft.model.Policies.IgnoreGap
-    case "resnapshot" => graft.model.Policies.ResnapshotOnGap
+  def parse(s: String): Policies.LsnGapAction = s.toLowerCase match {
+    case "fail" => Policies.FailOnGap
+    case "ignore" => Policies.IgnoreGap
+    case "resnapshot" => Policies.ResnapshotOnGap
     case other =>
       sys.error(s"unknown lsnGapStrategy '$other' (fail | ignore | resnapshot)")
   }
@@ -178,39 +205,31 @@ private object LsnGap {
     * strictly-after scan resumes at the retention floor inclusively and
     * the gap check cannot re-fire after the backfill — without the
     * cursor advance this strategy loops forever (flip, backfill, flip). */
-  final case class Resnapshot(resumeFrom: graft.model.ChangeIndex) extends Outcome
+  final case class Resnapshot(resumeFrom: ChangeIndex) extends Outcome
 
-  /** Gap predicate: `stored < predecessor(minRetained)` — true exactly
-    * when an index EXISTS strictly between the stored cursor and the
-    * retention floor, i.e. a cleaned row could have been missed. (The
-    * coarser `stored < min` is wrong twice over: it false-positives when
-    * the floor is the immediate successor, and it makes resnapshot
-    * re-fire after its own backfill.) IgnoreGap skips the probe entirely
-    * — resume-from-min falls out of the strictly-after scan with no
-    * extra probe (the reference's begin_at_min_lsn). */
-  def resolve(backend: FeedBackend, table: String,
-      stored: graft.model.ChangeIndex,
-      strategy: graft.model.Policies.LsnGapAction): Outcome = {
-    import graft.model.{ChangeIndex, Policies}
+  /** Applies [[Policies.onLsnGap]] against the backend's retention floor.
+    * IgnoreGap skips the probe entirely — resume-from-min falls out of
+    * the strictly-after scan with no extra probe (the reference's
+    * begin_at_min_lsn) — and so does a cursor still at the Lowest
+    * sentinel, which nothing can have been cleaned below. */
+  def resolve(backend: FeedBackend, table: String, stored: ChangeIndex,
+      strategy: Policies.LsnGapAction): Outcome = {
     if (strategy == Policies.IgnoreGap || stored == ChangeIndex.Lowest)
       return Proceed
-    val floorPred = backend.minAvailableChange()
-      .filter(_ != ChangeIndex.Lowest).map(ChangeIndex.predecessor)
-    floorPred.filter(p => stored < p) match {
+    val min = backend.minAvailableChange()
+    min.flatMap(Policies.onLsnGap(_, stored, strategy)) match {
       case None => Proceed
-      case Some(p) => strategy match {
-        case Policies.FailOnGap =>
-          throw new CdcLsnGapException(
-            s"table '$table': stored change progress ${stored.lsnHex} is below " +
-              "the feed's minimum retained index — CDC cleanup outran the " +
-              "stream and rows may be lost (lsnGapStrategy=fail)")
-        case Policies.ResnapshotOnGap =>
-          if (backend.hasSnapshot) Resnapshot(p)
-          else throw new CdcLsnGapException(
-            s"table '$table': LSN gap with lsnGapStrategy=resnapshot but no " +
-              "snapshot source is configured — cannot re-backfill")
-        case Policies.IgnoreGap => Proceed // unreachable (probe skipped)
-      }
+      case Some(Policies.FailOnGap) =>
+        throw new CdcLsnGapException(
+          s"table '$table': stored change progress ${stored.lsnHex} is below " +
+            "the feed's minimum retained index — CDC cleanup outran the " +
+            "stream and rows may be lost (lsnGapStrategy=fail)")
+      case Some(Policies.ResnapshotOnGap) =>
+        if (backend.hasSnapshot) Resnapshot(ChangeIndex.predecessor(min.get))
+        else throw new CdcLsnGapException(
+          s"table '$table': LSN gap with lsnGapStrategy=resnapshot but no " +
+            "snapshot source is configured — cannot re-backfill")
+      case Some(Policies.IgnoreGap) => Proceed // unreachable (probe skipped)
     }
   }
 }
@@ -264,91 +283,76 @@ private object StartPoint {
   }
 }
 
-private class CdcMicroBatchStream(tableName: String, batchSize: Int,
-    backend: FeedBackend,
-    gapStrategy: graft.model.Policies.LsnGapAction = graft.model.Policies.FailOnGap,
-    startPoint: String = "earliest")
+/** The one CDC micro-batch stream, over a fleet of N >= 1 tracked tables
+  * with the reference's global admission scheduler (`main.py:209-284`,
+  * E6):
+  *
+  *   - each trigger advances ONE dimension of ONE table (the reference's
+  *     poll loop granularity), so the [[CdcOffset]] map in the offset log
+  *     is the whole fleet's position;
+  *   - a table's snapshot dimension advances first — one reverse-keyset
+  *     page per trigger until the empty-page probe declares SnapshotDone
+  *     (G3) — then its change dimension at most `batchSize` rows per
+  *     trigger (the reference's TOP(batch_size) pacing, E6/E7);
+  *   - a table is LAGGING when a FULL batchSize change window is pending
+  *     (its boundary probe came back full). While ANY table lags,
+  *     snapshots PAUSE — only lagging tables' change windows advance —
+  *     and snapshot paging resumes once the glut drains
+  *     (`main.py:243-244,263-264`);
+  *   - within a phase, tables advance in fleet order (the reference's
+  *     round-robin degenerates to this under AvailableNow-style draining).
+  *
+  * The per-trigger cost is one boundary probe per table (the reference
+  * pays the same per-table poll). With `tagged`, each row carries its
+  * table's name in slot 0 (the multi-table schema). */
+private class CdcStream(fleet: Seq[(String, FeedBackend)], batchSize: Int,
+    gapStrategy: Policies.LsnGapAction, startPoint: String, tagged: Boolean)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  // G5 runs ONCE per query instance, on the first change advance — the
-  // reference's startup progress-vs-min-LSN validation
+  private val tables = fleet.map(_._1)
+  private val backends = fleet.toMap
+
+  // G5 runs ONCE per (query instance, table), at the table's first change
+  // advance — the reference's startup progress-vs-min-LSN validation
   // (`tracked_tables.py:137-163`), where a gap can actually appear (the
   // stream was down, cleanup ran). A per-trigger probe would add a
   // driver-side seek (JDBC) or directory listing (parquet) to every
   // trigger for a condition that cannot arise while the query itself is
   // consuming.
-  private val gapChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val gapChecked = scala.collection.mutable.Set.empty[String]
 
-  private def pos(o: Offset): TablePosition =
-    o.asInstanceOf[CdcStreamOffset].offset.tables
-      .getOrElse(tableName, initialPosition)
+  // `startPoint=latest` (see [[StartPoint]]): each table's fresh-follow
+  // floor is its own current max index — per-table, because the fleet's
+  // tables are at unrelated positions. MEMOIZED per stream instance: the
+  // fallback for a table missing from a restored offset (newly added to
+  // the `tables` option) runs through positions() on EVERY call, and a
+  // re-probing floor could MOVE between latestOffset and
+  // planInputPartitions — rows landing between the two probes would be
+  // skipped forever while the committed end offset advanced past them. A
+  // checkpointed restart never calls initialOffset, so a resumed table
+  // pays no probe and cannot move its floor.
+  private lazy val initialPositions: Map[String, TablePosition] =
+    tables.map { t =>
+      t -> TablePosition(
+        if (startPoint == "latest")
+          backends(t).maxAvailableChange().getOrElse(ChangeIndex.Lowest)
+        else ChangeIndex.Lowest,
+        if (backends(t).hasSnapshot) SnapshotNotStarted else SnapshotDone)
+    }.toMap
 
-  private def initialSnapshot: SnapshotPosition =
-    if (backend.hasSnapshot) SnapshotNotStarted else SnapshotDone
+  private def positions(o: Offset): Map[String, TablePosition] = {
+    val m = o.asInstanceOf[CdcStreamOffset].offset.tables
+    tables.map(t => t -> m.getOrElse(t, initialPositions(t))).toMap
+  }
 
-  // `startPoint=latest` (see [[StartPoint]]): the fresh-follow floor is
-  // the feed's current max index, probed once at query start (lazy val —
-  // a checkpointed restart never calls initialOffset, so a resumed query
-  // pays no probe and, more importantly, cannot MOVE its floor).
-  private lazy val initialPosition: TablePosition =
-    TablePosition(
-      if (startPoint == "latest")
-        backend.maxAvailableChange().getOrElse(ChangeIndex.Lowest)
-      else ChangeIndex.Lowest,
-      initialSnapshot)
+  private def offset(ps: Map[String, TablePosition]): Offset =
+    CdcStreamOffset(CdcOffset(ps))
 
-  private def mkOffset(p: TablePosition): CdcStreamOffset =
-    CdcStreamOffset(CdcOffset(Map(tableName -> p)))
-
-  override def initialOffset(): Offset = mkOffset(initialPosition)
-
-  // Snapshot pages walk a COMPOSITE key (user_id, event_id): paging on
-  // user_id alone would drop rows whenever duplicate key values straddle
-  // a page boundary (the strictly-below filter excludes the remainder of
-  // the split group forever). The reference pages on the full PK for the
-  // same reason (`sql_queries.py:312-367`). CONTRACT: the composite
-  // (user_id, event_id) must be UNIQUE in the snapshot table — keyset
-  // pagination over non-unique keys cannot be lossless. Codec + signed
-  // ordering live in [[SnapshotKey]] (shared with the inspection tools).
-  private def keyHex(k: Long, e: Long): String = SnapshotKey.toHex(k, e)
-  private def keyFromHex(h: String): (Long, Long) = SnapshotKey.fromHex(h)
+  override def initialOffset(): Offset =
+    offset(tables.map(t => t -> initialPositions(t)).toMap)
 
   override def deserializeOffset(json: String): Offset =
     CdcStreamOffset(CdcOffset.fromJson(json))
-
-  /** Admission control: the snapshot dimension advances first — one
-    * reverse-keyset page per trigger until the empty-page probe declares
-    * SnapshotDone (G3) — then the change dimension advances at most
-    * `batchSize` rows per trigger (the reference's TOP(batch_size)
-    * pacing, E6/E7; interleaving policy `main.py:214-267`). */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val p = pos(start)
-    p.snapshot match {
-      case SnapshotNotStarted | SnapshotAt(_) =>
-        val below = p.snapshot match {
-          case SnapshotAt(h) => Some(keyFromHex(h))
-          case _ => None
-        }
-        backend.snapshotPageBoundary(below) match {
-          case None => mkOffset(p.copy(snapshot = SnapshotDone))
-          case Some((u, e)) => mkOffset(p.copy(snapshot = SnapshotAt(keyHex(u, e))))
-        }
-      case SnapshotDone =>
-        val gap =
-          if (gapChecked.getAndSet(true))
-            LsnGap.Proceed
-          else LsnGap.resolve(backend, tableName, p.changeIndex, gapStrategy)
-        gap match {
-          case LsnGap.Resnapshot(resumeFrom) =>
-            mkOffset(p.copy(snapshot = SnapshotNotStarted,
-              changeIndex = resumeFrom))
-          case LsnGap.Proceed =>
-            val end = backend.changeBoundary(p.changeIndex)
-              .map(_._1).getOrElse(p.changeIndex)
-            mkOffset(p.copy(changeIndex = end))
-        }
-    }
-  }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(batchSize)
 
@@ -356,35 +360,100 @@ private class CdcMicroBatchStream(tableName: String, batchSize: Int,
     throw new UnsupportedOperationException(
       "SupportsAdmissionControl.latestOffset(start, limit) is used")
 
-  /** Partitions carry the offset-range PREDICATE (a file split or a range
-    * query) — never rows. Replay after restart therefore depends only on
-    * the committed offset pair: re-planning a batch with a different
-    * configured batchSize yields exactly the same rows (no limit() in
-    * this path). */
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = pos(start); val e = pos(end)
-    (s.snapshot, e.snapshot) match {
-      case (SnapshotDone, SnapshotNotStarted) =>
-        Array.empty // G5 re-backfill flip: pages start NEXT trigger
-      case (sp, ep) if sp != ep && ep != SnapshotDone =>
-        // A snapshot page: keys strictly below the start bound, down to
-        // and including the end position's composite key.
-        val upper = sp match {
-          case SnapshotAt(h) => Some(keyFromHex(h))
+  /** The global scheduler. Boundary-probes every snapshot-done table
+    * (a driver-side lookup each — the reference's per-table poll), then:
+    * lagging tables drain first with snapshots paused; otherwise the
+    * first unfinished snapshot advances one page; otherwise the first
+    * table with pending changes advances one window. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val ps = positions(start)
+    // Pending change window per snapshot-done table. A table still
+    // snapshotting doesn't poll changes yet (per-table contract:
+    // snapshot first), so it cannot lag.
+    val pending: Map[String, Option[(ChangeIndex, Long)]] = tables.map { t =>
+      t -> (if (ps(t).snapshot == SnapshotDone)
+        backends(t).changeBoundary(ps(t).changeIndex) else None)
+    }.toMap
+    val lagging = tables.filter(t => pending(t).exists(_._2 >= batchSize)).toSet
+    val (toPoll, snapshotsAllowed) = Policies.admissionPlan(tables, lagging)
+
+    def advanceChange(t: String): Offset = {
+      val gap =
+        if (!gapChecked.add(t)) LsnGap.Proceed
+        else LsnGap.resolve(backends(t), t, ps(t).changeIndex, gapStrategy)
+      gap match {
+        case LsnGap.Resnapshot(resumeFrom) =>
+          // G5: this table re-backfills before more changes.
+          offset(ps.updated(t, ps(t).copy(
+            snapshot = SnapshotNotStarted, changeIndex = resumeFrom)))
+        case LsnGap.Proceed =>
+          offset(ps.updated(t, ps(t).copy(changeIndex = pending(t).get._1)))
+      }
+    }
+
+    val snapshotTable =
+      if (!snapshotsAllowed) None
+      else tables.find(t => ps(t).snapshot != SnapshotDone)
+    snapshotTable match {
+      case Some(t) =>
+        // Snapshot pages walk a COMPOSITE key (user_id, event_id): paging
+        // on user_id alone would drop rows whenever duplicate key values
+        // straddle a page boundary (the strictly-below filter excludes the
+        // remainder of the split group forever). The reference pages on
+        // the full PK for the same reason (`sql_queries.py:312-367`).
+        // CONTRACT: the composite must be UNIQUE in the snapshot table —
+        // keyset pagination over non-unique keys cannot be lossless.
+        val below = ps(t).snapshot match {
+          case SnapshotAt(h) => Some(SnapshotKey.fromHex(h))
           case _ => None
         }
-        val lower = ep match {
-          case SnapshotAt(h) => keyFromHex(h)
-          case _ => (Long.MinValue, Long.MinValue)
+        val next = backends(t).snapshotPageBoundary(below) match {
+          case None => ps(t).copy(snapshot = SnapshotDone)
+          case Some((u, e)) =>
+            ps(t).copy(snapshot = SnapshotAt(SnapshotKey.toHex(u, e)))
         }
-        backend.snapshotPartitions(upper, lower)
-      case (sp, SnapshotDone) if sp != SnapshotDone =>
-        Array.empty // the done-transition batch carries no rows
-      case _ =>
-        if (s.changeIndex >= e.changeIndex) Array.empty
-        else backend.changePartitions(
-          ChangeIndex.parts(s.changeIndex), ChangeIndex.parts(e.changeIndex))
+        offset(ps.updated(t, next))
+      case None =>
+        toPoll.find(t => pending(t).isDefined) match {
+          case Some(t) => advanceChange(t)
+          case None => offset(ps) // fleet idle
+        }
     }
+  }
+
+  /** Exactly one table's position differs between start and end (the
+    * scheduler advances one dimension per trigger). Partitions carry the
+    * offset-range PREDICATE (a file split or a range query) — never rows.
+    * Replay after restart therefore depends only on the committed offset
+    * pair: re-planning a batch with a different configured batchSize
+    * yields exactly the same rows (no limit() in this path). */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val s = positions(start); val e = positions(end)
+    tables.filter(t => s(t) != e(t)).flatMap { t =>
+      val parts: Array[InputPartition] = (s(t).snapshot, e(t).snapshot) match {
+        case (SnapshotDone, SnapshotNotStarted) =>
+          Array.empty // G5 re-backfill flip: pages start NEXT trigger
+        case (sp, ep) if sp != ep && ep != SnapshotDone =>
+          // A snapshot page: keys strictly below the start bound, down to
+          // and including the end position's composite key.
+          val upper = sp match {
+            case SnapshotAt(h) => Some(SnapshotKey.fromHex(h))
+            case _ => None
+          }
+          val lower = ep match {
+            case SnapshotAt(h) => SnapshotKey.fromHex(h)
+            case _ => (Long.MinValue, Long.MinValue)
+          }
+          backends(t).snapshotPartitions(upper, lower)
+        case (sp, SnapshotDone) if sp != SnapshotDone =>
+          Array.empty // the done-transition batch carries no rows
+        case _ =>
+          if (s(t).changeIndex >= e(t).changeIndex) Array.empty
+          else backends(t).changePartitions(
+            ChangeIndex.parts(s(t).changeIndex), ChangeIndex.parts(e(t).changeIndex))
+      }
+      if (tagged) parts.map(p => TaggedPartition(t, p): InputPartition) else parts
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = CdcPredicateReaderFactory
@@ -616,35 +685,34 @@ private class JdbcBackend(url: String, captureInstance: String,
       } finally st.close()
     }
 
+  /** The 4 binds of a change index, in (lsn, cmd, seqval, op) order. */
+  private def binds(i: (Long, Int, Long, Int)): Seq[String] =
+    Seq(lit(hex20(i._1)), i._2.toString, lit(hex20(i._3)), i._4.toString)
+
+  /** A probe row's 4 change-index columns, decoded. */
+  private def changeIndex(r: IndexedSeq[AnyRef]): ChangeIndex =
+    ChangeIndex(
+      ChangeIndex.lsnFromLong(parseHex20(r(0).toString)),
+      r(1).asInstanceOf[Number].intValue(),
+      ChangeIndex.lsnFromLong(parseHex20(r(2).toString)),
+      r(3).asInstanceOf[Number].intValue())
+
+  /** The last index (and the row count) of the seek-ordered TOP(n) scan
+    * strictly after `start`. */
+  private def boundary(start: ChangeIndex, n: Int): Option[(ChangeIndex, Long)] = {
+    val tsql = SqlServerDialect.changeBoundaryQuery(captureInstance, n)
+    lastRow(AnsiTranspile(tsql, binds(ChangeIndex.parts(start))), 4)
+      .map { case (r, count) => (changeIndex(r), count) }
+  }
+
   /** TOP(1) of the seek-ordered scan strictly after the Lowest sentinel
     * (no retained row sits AT the all-zero sentinel). */
-  override def minAvailableChange(): Option[ChangeIndex] = {
-    val (sl, sc, ss, so) = ChangeIndex.parts(ChangeIndex.Lowest)
-    val tsql = SqlServerDialect.changeBoundaryQuery(captureInstance, 1)
-    val sql = AnsiTranspile(tsql,
-      Seq(lit(hex20(sl)), sc.toString, lit(hex20(ss)), so.toString))
-    lastRow(sql, 4).map { case (r, _) =>
-      ChangeIndex(
-        ChangeIndex.lsnFromLong(parseHex20(r(0).toString)),
-        r(1).asInstanceOf[Number].intValue(),
-        ChangeIndex.lsnFromLong(parseHex20(r(2).toString)),
-        r(3).asInstanceOf[Number].intValue())
-    }
-  }
+  override def minAvailableChange(): Option[ChangeIndex] =
+    boundary(ChangeIndex.Lowest, 1).map(_._1)
 
   override def changeBoundary(start: ChangeIndex): Option[(ChangeIndex, Long)] = {
     assertSchemaUnchanged()
-    val (sl, sc, ss, so) = ChangeIndex.parts(start)
-    val tsql = SqlServerDialect.changeBoundaryQuery(captureInstance, batchSize)
-    val sql = AnsiTranspile(tsql,
-      Seq(lit(hex20(sl)), sc.toString, lit(hex20(ss)), so.toString))
-    lastRow(sql, 4).map { case (r, n) =>
-      (ChangeIndex(
-        ChangeIndex.lsnFromLong(parseHex20(r(0).toString)),
-        r(1).asInstanceOf[Number].intValue(),
-        ChangeIndex.lsnFromLong(parseHex20(r(2).toString)),
-        r(3).asInstanceOf[Number].intValue()), n)
-    }
+    boundary(start, batchSize)
   }
 
   /** Descending TOP(1) over the CDC index — a single backward seek
@@ -652,13 +720,7 @@ private class JdbcBackend(url: String, captureInstance: String,
   override def maxAvailableChange(): Option[ChangeIndex] = {
     val sql = AnsiTranspile(
       SqlServerDialect.maxChangeIndexQuery(captureInstance), Seq.empty)
-    lastRow(sql, 4).map { case (r, _) =>
-      ChangeIndex(
-        ChangeIndex.lsnFromLong(parseHex20(r(0).toString)),
-        r(1).asInstanceOf[Number].intValue(),
-        ChangeIndex.lsnFromLong(parseHex20(r(2).toString)),
-        r(3).asInstanceOf[Number].intValue())
-    }
+    lastRow(sql, 4).map { case (r, _) => changeIndex(r) }
   }
 
   override def snapshotPageBoundary(below: Option[(Long, Long)]): Option[(Long, Long)] = {
@@ -679,10 +741,7 @@ private class JdbcBackend(url: String, captureInstance: String,
       end: (Long, Int, Long, Int)): Array[InputPartition] = {
     val tsql = SqlServerDialect.changeWindowQuery(
       captureInstance, CdcTableProvider.changeValueFields)
-    val sql = AnsiTranspile(tsql, Seq(
-      lit(hex20(start._1)), start._2.toString, lit(hex20(start._3)), start._4.toString,
-      lit(hex20(end._1)), end._2.toString, lit(hex20(end._3)), end._4.toString))
-    Array(JdbcChangePartition(url, sql))
+    Array(JdbcChangePartition(url, AnsiTranspile(tsql, binds(start) ++ binds(end))))
   }
 
   override def snapshotPartitions(upper: Option[(Long, Long)],
@@ -712,11 +771,16 @@ private case class JdbcChangePartition(url: String, sql: String) extends InputPa
 /** A JDBC snapshot-page split; SELECT order = snapshotFields. */
 private case class JdbcSnapshotPartition(url: String, sql: String) extends InputPartition
 
+/** A split of a tagged stream: its rows carry `table` in slot 0. */
+private case class TaggedPartition(table: String, split: InputPartition)
+    extends InputPartition
+
 /** Executor-side readers for the predicate-carrying splits. Parquet
   * splits scan a staged CDC file with the parquet-hadoop Group API
   * directly (no SparkSession on executors); JDBC splits execute their
   * range query over a per-partition connection. Per-split cost is one
-  * sequential pass either way. */
+  * sequential pass either way. A [[TaggedPartition]]'s rows are built
+  * with the table-name tag in slot 0, in the same array. */
 private object CdcPredicateReaderFactory extends PartitionReaderFactory {
 
   import org.apache.parquet.example.data.Group
@@ -749,32 +813,48 @@ private object CdcPredicateReaderFactory extends PartitionReaderFactory {
   private def optDouble(g: Group, f: String): Any =
     if (isNull(g, f)) null else g.getDouble(f, 0)
 
+  /** One output row: the 9 single-table columns, after the table tag when
+    * `tag` is non-null. */
+  private def row(tag: UTF8String, lsn: Long, cmd: Int, seq: Long, op: Int,
+      eventId: Any, userId: Any, eventType: UTF8String, value: Any,
+      props: UTF8String): InternalRow =
+    new GenericInternalRow(
+      if (tag == null)
+        Array[Any](lsn, cmd, seq, op, eventId, userId, eventType, value, props)
+      else
+        Array[Any](tag, lsn, cmd, seq, op, eventId, userId, eventType, value, props))
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
+      case TaggedPartition(table, split) => reader(split, UTF8String.fromString(table))
+      case split => reader(split, null)
+    }
+
+  private def reader(split: InputPartition, tag: UTF8String): PartitionReader[InternalRow] =
+    split match {
       case ChangeRangePartition(f, s, e) =>
-        parquetReader(f, g => {
+        parquetReader(f, tag, g => {
           val k = (g.getLong("lsn_num", 0), g.getInteger("command_id", 0),
             g.getLong("seqval_num", 0), g.getInteger("operation", 0))
           cmp4(k, s) > 0 && cmp4(k, e) <= 0
         })
       case SnapshotRangePartition(f, upper, lower) =>
-        parquetReader(f, g => {
+        parquetReader(f, tag, g => {
           val k = (g.getLong("user_id", 0), g.getLong("event_id", 0))
           cmp2(k, lower) >= 0 && upper.forall(u => cmp2(k, u) < 0)
         })
       case JdbcChangePartition(url, sql) =>
-        jdbcReader(url, sql, rs => new GenericInternalRow(Array[Any](
+        jdbcReader(url, sql, rs => row(tag,
           AnsiTranspile.parseHex20(rs.getString(1)),
           rs.getInt(2),
           AnsiTranspile.parseHex20(rs.getString(3)),
           rs.getInt(4),
-          jLong(rs, 5), jLong(rs, 6), jStr(rs, 7), jDouble(rs, 8), jStr(rs, 9))))
+          jLong(rs, 5), jLong(rs, 6), jStr(rs, 7), jDouble(rs, 8), jStr(rs, 9)))
       case JdbcSnapshotPartition(url, sql) =>
         // Snapshot rows carry the zero change-index sentinel (operation 0)
         // — the same envelope the parquet staging writes.
-        jdbcReader(url, sql, rs => new GenericInternalRow(Array[Any](
-          0L, 0, 0L, 0,
-          rs.getLong(2), rs.getLong(1), jStr(rs, 3), jDouble(rs, 4), jStr(rs, 5))))
+        jdbcReader(url, sql, rs => row(tag, 0L, 0, 0L, 0,
+          rs.getLong(2), rs.getLong(1), jStr(rs, 3), jDouble(rs, 4), jStr(rs, 5)))
     }
 
   // ---- null-safe ResultSet accessors (JDBC getLong/getDouble return 0
@@ -792,7 +872,7 @@ private object CdcPredicateReaderFactory extends PartitionReaderFactory {
     if (rs.wasNull()) null else v
   }
 
-  private def parquetReader(file: String,
+  private def parquetReader(file: String, tag: UTF8String,
       keep: Group => Boolean): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val reader: ParquetReader[Group] = ParquetReader
@@ -809,12 +889,12 @@ private object CdcPredicateReaderFactory extends PartitionReaderFactory {
 
       override def get(): InternalRow = {
         val g = current
-        new GenericInternalRow(Array[Any](
+        row(tag,
           g.getLong("lsn_num", 0), g.getInteger("command_id", 0),
           g.getLong("seqval_num", 0), g.getInteger("operation", 0),
           optLong(g, "event_id"), optLong(g, "user_id"),
           optStr(g, "event_type"), optDouble(g, "value"),
-          optStr(g, "props")))
+          optStr(g, "props"))
       }
 
       override def close(): Unit = reader.close()

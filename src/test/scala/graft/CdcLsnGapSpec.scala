@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** G5 exercised IN-STREAM: CDC cleanup outruns the checkpoint (the feed's
@@ -39,9 +39,15 @@ class CdcLsnGapSpec extends AnyFunSuite with LocalSpark {
 
   private def runStream(feed: String, sink: String, ckpt: String,
       extra: Map[String, String] = Map.empty): Unit = {
+    val q = startStream(feed, sink, ckpt, extra)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  private def startStream(feed: String, sink: String, ckpt: String,
+      extra: Map[String, String]): StreamingQuery = {
     val reader = spark.readStream.format("graft.sources.CdcTableProvider")
       .option("feedDir", feed).option("tableName", "t").option("batchSize", "200")
-    val q = extra.foldLeft(reader) { case (r, (k, v)) => r.option(k, v) }
+    extra.foldLeft(reader) { case (r, (k, v)) => r.option(k, v) }
       .load()
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -54,8 +60,10 @@ class CdcLsnGapSpec extends AnyFunSuite with LocalSpark {
         ()
       }
       .start()
-    try q.processAllAvailable() finally q.stop()
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   test("fail (default): a gap terminates the restarted query loudly") {
     val feed = s"$work/feedF"
@@ -67,9 +75,25 @@ class CdcLsnGapSpec extends AnyFunSuite with LocalSpark {
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       runStream(feed, s"$work/sinkF", s"$work/ckptF")
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).mkString("\n").contains("CDC cleanup outran the stream"))
+  }
+
+  test("fail: a gap that opens under an idle restarted query fails its first change advance") {
+    val feed = s"$work/feedL"; val sink = s"$work/sinkL"; val ckpt = s"$work/ckptL"
+    stage(feed, 0, 500, replace = false)
+    runStream(feed, sink, ckpt)
+    assert(spark.read.parquet(sink).count() === 500)
+
+    // Run 2 resumes caught up: with nothing pending it advances no change
+    // window, so G5 has not run yet when cleanup outruns it.
+    val q = startStream(feed, sink, ckpt, Map.empty)
+    try {
+      q.processAllAvailable()
+      stage(feed, 1000, 1300, replace = true)
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      assert(messages(e).mkString("\n").contains("CDC cleanup outran the stream"))
+    } finally q.stop()
+    assert(spark.read.parquet(sink).count() === 500)
   }
 
   test("ignore: the restarted query resumes from the retention floor") {

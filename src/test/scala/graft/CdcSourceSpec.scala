@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.CdcPipeline
 
 /** The custom DSv2 CDC MicroBatchStream: ordered batch-size-paced windows,
-  * exactly-once delivery, CdcOffset JSON in the offset log, and restart
-  * resume from the checkpoint. */
+  * exactly-once delivery, CdcOffset JSON in the offset log, restart
+  * resume from the checkpoint, and one stream behind both providers. */
 class CdcSourceSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -292,5 +292,94 @@ class CdcSourceSpec extends AnyFunSuite with LocalSpark {
     // Restart with nothing new: no duplicates appear.
     runToSink(sink, ckpt)
     assert(spark.read.parquet(sink).count() === 1000)
+  }
+
+  test("one table reads the same through both providers, batch for batch, and either resumes the other's checkpoint") {
+    // One table "events" with a snapshot (1,500 rows, 5 pages) and two of
+    // three change chunks, laid out for both providers.
+    val base = s"$work/parity"
+    val feed = s"$base/events/feed"; val snap = s"$base/events/snapshot"
+    CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 3,
+      chunkRange = Some(0 until 2))
+    spark.read.parquet(s"$sfDir/orders.parquet")
+      .select(lit(0L).as("lsn_num"), lit(0).as("command_id"),
+        lit(0L).as("seqval_num"), lit(0).as("operation"),
+        col("o_orderkey").as("event_id"), col("o_orderkey").as("user_id"),
+        col("o_orderstatus").as("event_type"), col("o_totalprice").as("value"),
+        col("o_orderpriority").as("props"))
+      .coalesce(2).write.mode("overwrite").parquet(snap)
+
+    def drain(multi: Boolean, sink: String, ckpt: String): Unit = {
+      val reader =
+        if (multi) spark.readStream.format("graft.sources.CdcMultiTableProvider")
+          .option("baseDir", base).option("tables", "events")
+        else spark.readStream.format("graft.sources.CdcTableProvider")
+          .option("feedDir", feed).option("snapshotDir", snap)
+          .option("tableName", "events")
+      val q = reader.option("batchSize", "300").load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime(0))
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.sparkSession.conf
+            .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+          batch.drop("table_name").withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").partitionBy("batch_id").parquet(sink)
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def batches(sink: String): Map[Long, Seq[String]] =
+      spark.read.parquet(sink).collect().toSeq
+        .groupBy(r => r.getAs[Number]("batch_id").longValue())
+        .map { case (b, rs) => b -> rs.map(_.toString).sorted }
+    // Offset-log files, minus the wall-clock trigger time of each batch.
+    def offsetLog(ckpt: String): Seq[(String, String)] =
+      new java.io.File(s"$ckpt/offsets").listFiles().filterNot(_.getName.startsWith("."))
+        .sortBy(_.getName).toSeq.map { f =>
+          f.getName -> new String(Files.readAllBytes(f.toPath), "UTF-8")
+            .replaceAll("\"batchTimestampMs\":\\d+", "")
+        }
+
+    val (sinkS, ckptS) = (s"$base/sinkS", s"$base/ckptS")
+    val (sinkM, ckptM) = (s"$base/sinkM", s"$base/ckptM")
+    drain(multi = false, sinkS, ckptS)
+    drain(multi = true, sinkM, ckptM)
+    val single = batches(sinkS)
+    assert(single.size >= 8, s"expected snapshot pages and change windows, got ${single.keys}")
+    assert(batches(sinkM) === single)
+    assert(offsetLog(ckptM) === offsetLog(ckptS))
+
+    // The third chunk lands; each provider resumes the OTHER's checkpoint
+    // and delivers exactly the new rows.
+    CdcPipeline.stageChangeFeed(spark, sfDir, feed, nChunks = 3,
+      chunkRange = Some(2 until 3))
+    drain(multi = true, sinkS, ckptS)
+    drain(multi = false, sinkM, ckptM)
+    val all = spark.read.schema(graft.sources.CdcTableProvider.schema).parquet(feed)
+    val nSnap = spark.read.parquet(snap).count()
+    for (sink <- Seq(sinkS, sinkM)) {
+      val out = spark.read.parquet(sink)
+      assert(out.count() === nSnap + all.count(), sink)
+      assert(out.select("operation", "user_id", "seqval_num", "event_id")
+        .distinct().count() === out.count(), sink)
+    }
+    assert(batches(sinkM) === batches(sinkS))
+  }
+
+  test("one CDC micro-batch stream: exactly one main source file declares a MicroBatchStream") {
+    import scala.jdk.CollectionConverters._
+    val needle = "extends " + "MicroBatchStream"
+    val root = java.nio.file.Paths.get("src/main")
+    assert(Files.isDirectory(root), s"$root not found from ${java.nio.file.Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    val streams =
+      try walk.iterator.asScala.filter { p =>
+        Files.isRegularFile(p) && p.toString.endsWith(".scala") &&
+          Files.readString(p).contains(needle)
+      }.map(_.toString).toList
+      finally walk.close()
+    assert(streams === Seq("src/main/scala/graft/sources/CdcTableProvider.scala"))
   }
 }

@@ -49,6 +49,9 @@ class ModelPoliciesSpec extends AnyFunSuite {
     assert(Policies.onLsnGap(minAvailable = lo, stored = hi, Policies.FailOnGap).isEmpty)
     assert(Policies.onLsnGap(minAvailable = hi, stored = lo, Policies.ResnapshotOnGap)
       .contains(Policies.ResnapshotOnGap))
+    // A cursor at the floor's immediate predecessor missed nothing.
+    assert(Policies.onLsnGap(minAvailable = hi, stored = ChangeIndex.predecessor(hi),
+      Policies.FailOnGap).isEmpty)
   }
 
   private val base = Map(
